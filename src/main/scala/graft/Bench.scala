@@ -50,7 +50,37 @@ import org.apache.spark.sql.functions.{col, struct, xxhash64}
   */
 object Bench {
 
-  private def checksum(df: DataFrame): Unit = {
+  /** The board's session: the graft session at local[SPARK_GRAFT_CPUS]
+    * plus one static conf that must precede session creation. The default
+    * codegen class cache (100 entries) cannot hold one board pass (~170
+    * queries x several codegen stages), so every pass re-compiled and
+    * re-JITted every plan — pure fixed overhead billed to every query's
+    * number. Sized to hold the whole board hot.
+    */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Between-query hygiene: a handful of operators localCheckpoint or
+    * persist intermediate state (packing, iterative dedup, IVF build).
+    * Left in place across the board those blocks squat in storage memory
+    * and skew LATER queries' timings (observed 10x on unrelated queries).
+    * Each registry entry is self-contained, so dropping all persisted
+    * state after a query finishes is safe and makes every timing a
+    * clean-session measurement.
+    */
+  private[graft] def resetState(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  private[graft] def checksum(df: DataFrame): Unit = {
     df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
       .selectExpr("bit_xor(__h)")
       .collect()
@@ -107,27 +137,7 @@ object Bench {
     */
   private def runBoard(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // match GraftSession: typed-Aggregator queries must not fall back to
-      // sort-based aggregation at 128 groups (see GraftSession.builder)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "4096"))
-      // static conf, must precede session creation: the default codegen
-      // class cache (100 entries) cannot hold one board pass (~170
-      // queries x several codegen stages), so every pass re-compiled
-      // and re-JITted every plan — pure fixed overhead billed to every
-      // query's number. Sized to hold the whole board hot.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     // warm-up: a scan+agg+join exercising codegen, shuffle and parquet IO
     graft.queries.Registry.byName.get("q03_join_revenue_by_nation")
@@ -138,18 +148,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val picked = only.fold(SparkEntry.queries)(w =>
       SparkEntry.queries.filter(kv => w(kv._1)))
-    // Between-query hygiene: a handful of operators localCheckpoint or
-    // persist intermediate state (packing, iterative dedup, IVF build).
-    // Left in place across 149 queries those blocks squat in storage
-    // memory and skew LATER queries' timings (observed 10x on unrelated
-    // queries). Each registry entry is self-contained, so dropping all
-    // persisted state after a query finishes is safe and makes every
-    // timing a clean-session measurement.
-    def resetState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     // time + GC seconds attributable to the one query's run; None for a
     // failed run — a throw is usually much FASTER than the real work,
@@ -166,7 +164,7 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       val gcDt = (gcMillis - gc0) / 1e3
       val cpuDt = if (cpu0 < 0) -1.0 else (cpuNanos - cpu0) / 1e9
-      resetState()
+      resetState(spark)
       if (ok) Some((dt, gcDt, cpuDt)) else None
     }
     val passes = math.max(1,

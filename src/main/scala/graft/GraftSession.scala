@@ -32,10 +32,8 @@ object GraftSession {
       // aggregates whose whole point is small bounded state (measured 2x
       // on the -State/-Merge rows: 0.87s -> 0.45s). 4096 entries bounds
       // the in-memory object map at ~16 MB per task even for the largest
-      // sketch here (4 KB HLL registers); override per deployment via
-      // SPARK_GRAFT_OBJ_AGG_FALLBACK when group states are bigger.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "4096"))
+      // sketch here (4 KB HLL registers).
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
       // a multi-minute host stall (noisy VM, STW GC) must not KILL the
       // context: with the 120s default, HeartbeatReceiver removes the
       // in-process "driver" executor after one freeze and every suite
@@ -49,16 +47,16 @@ object GraftSession {
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.ui.enabled", "false")
 
-  /** Create (or reuse) a session and register the ClickHouse-compatible SQL
-    * function surface (`toYYYYMM`, `uniq`, `argMax`, ...) so `spark.sql`
-    * text written against the reference dialect keeps working.
+  /** Create (or reuse) a session. Its ClickHouse-compatible SQL function
+    * surface (`toYYYYMM`, `uniq`, `argMax`, ...) comes from
+    * [[graft.plans.GraftExtensions]], so `spark.sql` text written against
+    * the reference dialect works in it and in every `newSession()` of it.
     */
   def create(
       master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.ChRegistry.registerAll(spark)
     spark
   }
 }

@@ -79,7 +79,7 @@ object SparkEntry {
   /** Oracle SQL with the `{SF_DIR}` placeholder resolved to the scale
     * factor directory actually being verified — for oracles that must
     * name a parquet file literally (q62's `parquet_metadata`), so the
-    * board stays SF-portable. Verify/DevVerify dump THIS form.
+    * board stays SF-portable. Verify dumps THIS form.
     */
   def oracleSqlFor(sfDir: String): Map[String, String] =
     oracleSql.map { case (k, v) => k -> v.replace("{SF_DIR}", sfDir) }

@@ -111,10 +111,6 @@ final class ChSession(val spark: SparkSession,
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  graft.functions.ChRegistry.registerAll(spark)
-  graft.plans.NativeFunctions.register(spark)
-  graft.functions.StateSqlRegistry.register(spark)
-
   // ------------------------------------------------------------ state
 
   private val tables = mutable.LinkedHashMap.empty[(String, String), ChTable]

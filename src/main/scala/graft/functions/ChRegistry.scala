@@ -1,28 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.types._
 
-/** Registers ClickHouse-dialect function NAMES into the session's SQL
-  * function registry, so `spark.sql("SELECT toYYYYMM(d), uniq(x) ...")`
-  * written against the reference dialect runs unchanged
-  * (lectures/lecture_07.md:178, homeworks/hw06.md:113).
+/** ClickHouse-dialect function NAMES for the session's SQL function
+  * registry ([[graft.plans.GraftExtensions]] injects both tables), so
+  * `spark.sql("SELECT toYYYYMM(d), uniq(x) ...")` written against the
+  * reference dialect runs unchanged (lectures/lecture_07.md:178,
+  * homeworks/hw06.md:113).
   *
-  * Every registration maps to a native Catalyst expression tree (never a
-  * Scala UDF), so the dialect layer costs nothing at runtime: the plans
-  * are identical to the Spark-native spelling and stay codegen'd.
+  * Every `functions` entry maps to a native Catalyst expression tree
+  * (never a Scala UDF), so the dialect layer costs nothing at runtime: the
+  * plans are identical to the Spark-native spelling and stay codegen'd.
   */
 object ChRegistry {
 
-  def registerAll(spark: SparkSession): Unit = {
-    // the Column helpers in ChFunctions bridge to native kernels through
-    // call_function, so the kernel registry must ride along
-    graft.plans.NativeFunctions.register(spark)
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+  val functions: Seq[(String, FunctionBuilder)] = {
+    val table = Seq.newBuilder[(String, FunctionBuilder)]
+    def f(name: String)(builder: FunctionBuilder): Unit = table += name -> builder
 
     // date/time
     f("toYYYYMM")(e => Cast(DateFormatClass(e.head, Literal("yyyyMM")), IntegerType))
@@ -114,7 +112,8 @@ object ChRegistry {
     f("uniqArray")(e =>
       Size(ArrayDistinct(Flatten(CollectList(e.head)
         .toAggregateExpression()))))
-    f("countIf")(e => Count(Seq(new NullIf(Literal(1), If(e.head, Literal(1), Literal(2))))))
+    // countIf(cond): rows where cond holds; false and NULL count nothing
+    f("countIf")(e => Count(Seq(If(e.head, Literal(1), Literal.create(null, IntegerType)))))
     // -If combinators (lectures/lecture_06.md): agg over rows where cond
     // holds — If(cond, x, NULL) and the aggregate's null-skipping does the
     // rest (the analyzer coerces the NullType branch)
@@ -168,8 +167,8 @@ object ChRegistry {
     // tours, lectures/lecture_02.md:213, lecture_08.md): tuple() is CH's
     // anonymous struct (also its "empty partition key" idiom), toTypeName
     // prints the argument's type, hostName()/version() identify the server.
-    // hostName is bound once at registration — in local mode the driver IS
-    // the executing server, which is exactly CH's semantics.
+    // hostName is bound once, when the table is built — in local mode the
+    // driver IS the executing server, which is exactly CH's semantics.
     f("tuple")(e => CreateStruct(e))
     f("toTypeName")(e => TypeOf(e.head))
     f("currentDatabase")(_ => CurrentDatabase())
@@ -348,23 +347,33 @@ object ChRegistry {
       If(LessThan(Cast(e.head, DoubleType), Literal(1.0)), Literal(0L),
         ShiftLeft(Literal(1L),
           Cast(Floor(Log2(Cast(e.head, DoubleType))), IntegerType))))
+    // pointInPolygon(x, y, xs, ys) — CH passes tuples; the dialect takes
+    // parallel coordinate arrays. Even-odd ray casting, native kernel.
+    f("pointInPolygon")(e => Cast(graft.plans.PointInPolygon(e(0), e(1), e(2), e(3)),
+      IntegerType))
+    // arrayAUC(scores, labels): rank-sum AUC with tie-averaged ranks
+    f("arrayAUC")(e => graft.plans.ArrayAuc(
+      Cast(e(0), ArrayType(DoubleType)), Cast(e(1), ArrayType(IntegerType))))
+    table.result()
+  }
 
-    // parser-backed dialect macros — inlined expressions, so Catalyst
-    // optimizes through them like any built-in
-    val macros = new ChUdfs(spark)
-    macros.createFunction("toStartOfInterval", Seq("t", "s"),
-      "timestamp_seconds(CAST(unix_timestamp(t) / s AS LONG) * s)", orReplace = true)
-    macros.createFunction("has", Seq("arr", "x"), "array_contains(arr, x)",
-      orReplace = true)
-    macros.createFunction("arrayStringConcat", Seq("arr", "sep"),
-      "array_join(arr, sep)", orReplace = true)
-    macros.createFunction("extractAll", Seq("s", "re"),
-      "regexp_extract_all(s, re, 0)", orReplace = true)
+  /** Parser-backed dialect macros: each body is parsed once and inlined
+    * at the call site, so Catalyst optimizes through them like any
+    * built-in.
+    */
+  val macros: Seq[(String, FunctionBuilder)] = {
+    val table = Seq.newBuilder[(String, FunctionBuilder)]
+    def m(name: String, params: Seq[String], bodySql: String): Unit =
+      table += name -> ChUdfs.macroBuilder(CatalystSqlParser, name, params, bodySql)
+    m("toStartOfInterval", Seq("t", "s"),
+      "timestamp_seconds(CAST(unix_timestamp(t) / s AS LONG) * s)")
+    m("has", Seq("arr", "x"), "array_contains(arr, x)")
+    m("arrayStringConcat", Seq("arr", "sep"), "array_join(arr, sep)")
+    m("extractAll", Seq("s", "re"), "regexp_extract_all(s, re, 0)")
     // bar(x, min, max, width): full-block approximation of CH's chart
     // (CH draws eighth-blocks; we round to whole blocks)
-    macros.createFunction("bar", Seq("x", "mn", "mx", "w"),
-      "repeat('█', least(cast(w as int), greatest(0, cast(round((x - mn) / (mx - mn) * w) as int))))",
-      orReplace = true)
+    m("bar", Seq("x", "mn", "mx", "w"),
+      "repeat('█', least(cast(w as int), greatest(0, cast(round((x - mn) / (mx - mn) * w) as int))))")
     // geo family: haversine great-circle distance in meters (R=6371000;
     // CH's geoDistance uses an ellipsoid correction — we document the
     // spherical delta and keep one formula for both names, recomputable
@@ -373,98 +382,72 @@ object ChRegistry {
       "2 * 6371000.0d * asin(sqrt(pow(sin(radians(lat2 - lat1) / 2), 2) + " +
         "cos(radians(lat1)) * cos(radians(lat2)) * " +
         "pow(sin(radians(lon2 - lon1) / 2), 2)))"
-    macros.createFunction("greatCircleDistance",
-      Seq("lon1", "lat1", "lon2", "lat2"), haversine, orReplace = true)
-    macros.createFunction("geoDistance",
-      Seq("lon1", "lat1", "lon2", "lat2"), haversine, orReplace = true)
-    macros.createFunction("greatCircleAngle",
+    m("greatCircleDistance", Seq("lon1", "lat1", "lon2", "lat2"), haversine)
+    m("geoDistance", Seq("lon1", "lat1", "lon2", "lat2"), haversine)
+    m("greatCircleAngle",
       Seq("lon1", "lat1", "lon2", "lat2"),
       "degrees(2 * asin(sqrt(pow(sin(radians(lat2 - lat1) / 2), 2) + " +
         "cos(radians(lat1)) * cos(radians(lat2)) * " +
-        "pow(sin(radians(lon2 - lon1) / 2), 2))))", orReplace = true)
+        "pow(sin(radians(lon2 - lon1) / 2), 2))))")
     // single-ellipse form of pointInEllipses (the variadic CH form folds)
-    macros.createFunction("pointInEllipse",
+    m("pointInEllipse",
       Seq("x", "y", "x0", "y0", "a", "b"),
-      "cast(pow(x - x0, 2) / pow(a, 2) + pow(y - y0, 2) / pow(b, 2) <= 1.0d as int)",
-      orReplace = true)
-    // pointInPolygon(x, y, xs, ys) — CH passes tuples; the dialect takes
-    // parallel coordinate arrays. Even-odd ray casting, native kernel.
-    f("pointInPolygon")(e => Cast(graft.plans.PointInPolygon(e(0), e(1), e(2), e(3)),
-      IntegerType))
-    // arrayAUC(scores, labels): rank-sum AUC with tie-averaged ranks
-    f("arrayAUC")(e => graft.plans.ArrayAuc(
-      Cast(e(0), ArrayType(DoubleType)), Cast(e(1), ArrayType(IntegerType))))
-    macros.createFunction("splitByChar", Seq("sep", "s"),
-      "split(s, concat('\\\\Q', sep, '\\\\E'))", orReplace = true)
-    macros.createFunction("splitByString", Seq("sep", "s"),
-      "split(s, concat('\\\\Q', sep, '\\\\E'))", orReplace = true)
+      "cast(pow(x - x0, 2) / pow(a, 2) + pow(y - y0, 2) / pow(b, 2) <= 1.0d as int)")
+    m("splitByChar", Seq("sep", "s"), "split(s, concat('\\\\Q', sep, '\\\\E'))")
+    m("splitByString", Seq("sep", "s"), "split(s, concat('\\\\Q', sep, '\\\\E'))")
     // CH URL function family — same RE2-portable patterns as
     // graft.functions.UrlFunctions (keep the two in sync)
-    macros.createFunction("protocol", Seq("u"),
-      "lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))",
-      orReplace = true)
-    macros.createFunction("domain", Seq("u"),
+    m("protocol", Seq("u"),
+      "lower(regexp_extract(u, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1))")
+    m("domain", Seq("u"),
       "lower(regexp_replace(regexp_replace(regexp_extract(u, " +
-        "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1), '^[^@]*@', ''), ':[0-9]+$', ''))",
-      orReplace = true)
-    macros.createFunction("path", Seq("u"),
-      "regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1)",
-      orReplace = true)
-    macros.createFunction("queryString", Seq("u"),
-      "regexp_extract(u, '\\\\?([^#]*)', 1)", orReplace = true)
-    macros.createFunction("fragment", Seq("u"),
-      "regexp_extract(u, '#(.*)$', 1)", orReplace = true)
-    macros.createFunction("cutQueryString", Seq("u"),
-      "regexp_replace(u, '\\\\?[^#]*', '')", orReplace = true)
-    macros.createFunction("cutFragment", Seq("u"),
-      "regexp_replace(u, '#.*$', '')", orReplace = true)
+        "'^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1), '^[^@]*@', ''), ':[0-9]+$', ''))")
+    m("path", Seq("u"),
+      "regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1)")
+    m("queryString", Seq("u"), "regexp_extract(u, '\\\\?([^#]*)', 1)")
+    m("fragment", Seq("u"), "regexp_extract(u, '#(.*)$', 1)")
+    m("cutQueryString", Seq("u"), "regexp_replace(u, '\\\\?[^#]*', '')")
+    m("cutFragment", Seq("u"), "regexp_replace(u, '#.*$', '')")
     // p must fold to a literal at the call site (regexp_extract needs a
     // foldable pattern — constant folding inlines concat of literals)
-    macros.createFunction("extractURLParameter", Seq("u", "p"),
-      "regexp_extract(u, concat('[?&]', p, '=([^&#]*)'), 1)", orReplace = true)
+    m("extractURLParameter", Seq("u", "p"),
+      "regexp_extract(u, concat('[?&]', p, '=([^&#]*)'), 1)")
     // numeric array folds as lambda macros (ChUdfs binds lambda names);
     // results are DOUBLE (CH widens integer arrays similarly)
-    macros.createFunction("arraySum", Seq("arr"),
-      "aggregate(arr, CAST(0 AS DOUBLE), (acc, x) -> acc + x)",
-      orReplace = true)
-    macros.createFunction("arrayProduct", Seq("arr"),
-      "aggregate(arr, CAST(1 AS DOUBLE), (acc, x) -> acc * x)",
-      orReplace = true)
-    macros.createFunction("arrayAvg", Seq("arr"),
+    m("arraySum", Seq("arr"), "aggregate(arr, CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
+    m("arrayProduct", Seq("arr"),
+      "aggregate(arr, CAST(1 AS DOUBLE), (acc, x) -> acc * x)")
+    m("arrayAvg", Seq("arr"),
       "CASE WHEN size(arr) = 0 THEN 0.0D ELSE " +
-        "aggregate(arr, CAST(0 AS DOUBLE), (acc, x) -> acc + x) / size(arr) END",
-      orReplace = true)
-    macros.createFunction("arrayMin", Seq("arr"), "array_min(arr)",
-      orReplace = true)
-    macros.createFunction("arrayMax", Seq("arr"), "array_max(arr)",
-      orReplace = true)
+        "aggregate(arr, CAST(0 AS DOUBLE), (acc, x) -> acc + x) / size(arr) END")
+    m("arrayMin", Seq("arr"), "array_min(arr)")
+    m("arrayMax", Seq("arr"), "array_max(arr)")
     // lenient multi-format parses (lectures/lecture_21.md:105-107); the US
     // variant tries month-first forms before the ISO fallbacks, OrZero
     // yields epoch 0 instead of NULL on unparseable input
-    macros.createFunction("parseDateTimeBestEffort", Seq("s"),
+    m("parseDateTimeBestEffort", Seq("s"),
       """coalesce(try_to_timestamp(s, 'yyyy-MM-dd HH:mm:ss'),
         |         try_to_timestamp(s, "yyyy-MM-dd'T'HH:mm:ss"),
         |         try_to_timestamp(s, 'yyyy-MM-dd'),
         |         try_to_timestamp(s, 'dd/MM/yyyy HH:mm:ss'),
-        |         try_to_timestamp(s))""".stripMargin, orReplace = true)
-    macros.createFunction("parseDateTimeBestEffortOrZero", Seq("s"),
-      "coalesce(parseDateTimeBestEffort(s), timestamp_seconds(0))",
-      orReplace = true)
-    macros.createFunction("parseDateTimeBestEffortUSOrZero", Seq("s"),
+        |         try_to_timestamp(s))""".stripMargin)
+    m("parseDateTimeBestEffortOrZero", Seq("s"),
+      "coalesce(parseDateTimeBestEffort(s), timestamp_seconds(0))")
+    m("parseDateTimeBestEffortUSOrZero", Seq("s"),
       """coalesce(try_to_timestamp(s, 'MM/dd/yyyy HH:mm:ss'),
         |         try_to_timestamp(s, 'MM/dd/yyyy'),
         |         parseDateTimeBestEffort(s),
-        |         timestamp_seconds(0))""".stripMargin, orReplace = true)
+        |         timestamp_seconds(0))""".stripMargin)
     // graft_round_even = exact-binary-value half-even pre-round (printf
     // parity; Java %.2f alone would round the shortest repr half-up)
-    macros.createFunction("formatReadableSize", Seq("b"),
+    m("formatReadableSize", Seq("b"),
       """CASE WHEN b >= 1125899906842624D THEN format_string('%.2f PiB', graft_round_even(CAST(b AS DOUBLE) / 1125899906842624D, 2))
         |     WHEN b >= 1099511627776D THEN format_string('%.2f TiB', graft_round_even(CAST(b AS DOUBLE) / 1099511627776D, 2))
         |     WHEN b >= 1073741824D THEN format_string('%.2f GiB', graft_round_even(CAST(b AS DOUBLE) / 1073741824D, 2))
         |     WHEN b >= 1048576D THEN format_string('%.2f MiB', graft_round_even(CAST(b AS DOUBLE) / 1048576D, 2))
         |     WHEN b >= 1024D THEN format_string('%.2f KiB', graft_round_even(CAST(b AS DOUBLE) / 1024D, 2))
-        |     ELSE format_string('%.2f B', graft_round_even(CAST(b AS DOUBLE), 2)) END""".stripMargin,
-      orReplace = true)
+        |     ELSE format_string('%.2f B', graft_round_even(CAST(b AS DOUBLE), 2)) END""".stripMargin)
+    table.result()
   }
 
   private def jsonPath(json: Expression, key: Expression): Expression = {

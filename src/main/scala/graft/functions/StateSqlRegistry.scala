@@ -2,9 +2,17 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, encoderFor}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import StateSketches.{AvgBuf, Hll, packAvg, unpackAvg}
 
@@ -318,7 +326,7 @@ object StateSqlRegistry {
     * SQL type, so the value is rendered as a string (console-display
     * parity — the TYPED read surface is the `-Merge` family).
     */
-  private def finalize(blob: Array[Byte]): String = {
+  private def finalizeState(blob: Array[Byte]): String = {
     if (blob == null || blob.isEmpty) return null
     blob(0) match {
       case TagUniq =>
@@ -354,19 +362,38 @@ object StateSqlRegistry {
     "countstate" -> Seq("BIGINT"),
     "uniqexactstate" -> Seq("STRING"))
 
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("uniqState", udaf(UniqStateSql))
-    spark.udf.register("uniqMerge", udaf(UniqMergeSql))
-    spark.udf.register("avgState", udaf(AvgStateSql))
-    spark.udf.register("avgMerge", udaf(AvgMergeSql))
-    spark.udf.register("sumState", udaf(SumStateSql))
-    spark.udf.register("sumMerge", udaf(SumMergeSql))
-    spark.udf.register("maxIfState", udaf(MaxIfStateSql))
-    spark.udf.register("maxIfMerge", udaf(MaxIfMergeSql))
-    spark.udf.register("countState", udaf(CountStateSql))
-    spark.udf.register("countMerge", udaf(CountMergeSql))
-    spark.udf.register("uniqExactState", udaf(UniqExactStateSql))
-    spark.udf.register("uniqExactMerge", udaf(UniqExactMergeSql))
-    spark.udf.register("finalizeAggregation", (b: Array[Byte]) => finalize(b))
+  /** The expression `spark.udf.register(name, udaf(agg))` would build. */
+  private def aggregator[IN: TypeTag, BUF, OUT](name: String,
+      agg: Aggregator[IN, BUF, OUT]): (String, FunctionBuilder) =
+    name -> (children => ScalaAggregator(children, agg, ExpressionEncoder[IN](),
+      encoderFor(agg.bufferEncoder), aggregatorName = Some(name)))
+
+  val functions: Seq[(String, FunctionBuilder)] = Seq(
+    aggregator("uniqState", UniqStateSql),
+    aggregator("uniqMerge", UniqMergeSql),
+    aggregator("avgState", AvgStateSql),
+    aggregator("avgMerge", AvgMergeSql),
+    aggregator("sumState", SumStateSql),
+    aggregator("sumMerge", SumMergeSql),
+    aggregator("maxIfState", MaxIfStateSql),
+    aggregator("maxIfMerge", MaxIfMergeSql),
+    aggregator("countState", CountStateSql),
+    aggregator("countMerge", CountMergeSql),
+    aggregator("uniqExactState", UniqExactStateSql),
+    aggregator("uniqExactMerge", UniqExactMergeSql),
+    "finalizeAggregation" -> (e => FinalizeAggregation(e.head)))
+
+  /** `finalizeAggregation(state)` as a scalar expression: BINARY in (other
+    * inputs are implicitly cast), the [[finalizeState]] rendering out.
+    */
+  final case class FinalizeAggregation(child: Expression)
+      extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    override def inputTypes = Seq(BinaryType)
+    override def dataType: DataType = StringType
+    override protected def nullSafeEval(v: Any): Any =
+      UTF8String.fromString(finalizeState(v.asInstanceOf[Array[Byte]]))
+    override protected def withNewChildInternal(c: Expression): FinalizeAggregation =
+      copy(child = c)
+    override def prettyName: String = "finalizeAggregation"
   }
 }

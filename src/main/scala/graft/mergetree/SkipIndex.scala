@@ -35,7 +35,6 @@ object SkipIndex {
   def buildBloom(spark: SparkSession, path: String, column: String,
                  name: String, expectedPerFile: Long = 100000L,
                  fpp: Double = 0.01): Unit = {
-    NativeFunctions.register(spark)
     val bits = BloomPrune.optimalNumBits(expectedPerFile, fpp)
     spark.read.parquet(path)
       .groupBy(input_file_name().as("file"))
@@ -51,7 +50,6 @@ object SkipIndex {
   def buildTokenBloom(spark: SparkSession, path: String, textColumn: String,
                       name: String, expectedPerFile: Long = 1000000L,
                       fpp: Double = 0.01): Unit = {
-    NativeFunctions.register(spark)
     val bits = BloomPrune.optimalNumBits(expectedPerFile, fpp)
     spark.read.parquet(path)
       .select(input_file_name().as("file"),
@@ -73,7 +71,6 @@ object SkipIndex {
                       expectedPerFile: Long = 1000000L,
                       fpp: Double = 0.01): Unit = {
     require(n >= 1, s"n must be >= 1, got $n")
-    NativeFunctions.register(spark)
     val bits = BloomPrune.optimalNumBits(expectedPerFile, fpp)
     val low = lower(col(textColumn))
     spark.read.parquet(path)

@@ -38,7 +38,6 @@ object BloomPrune {
     */
   def build(df: DataFrame, key: Column, expectedItems: Long,
             numBits: Long): Array[Byte] = {
-    NativeFunctions.register(df.sparkSession)
     df.select(NativeFunctions.bloomAgg(key, expectedItems, numBits).as("b"))
       .head().getAs[Array[Byte]](0)
   }

@@ -31,7 +31,6 @@ object BpeTokenizer {
           sampleN: Int = 2000, maxWords: Int = 50000,
           salt: String = "bpe"): Seq[Merge] = {
     require(numMerges >= 0 && sampleN > 0 && maxWords > 0, "bad fit params")
-    graft.plans.NativeFunctions.register(docs.sparkSession)
     val sampled = Sampling.stratifiedExactN(
       docs.select(col(idCol), col(textCol)), lit(1), col(idCol),
       n = sampleN, salt = salt)
@@ -121,7 +120,6 @@ object BpeTokenizer {
     */
   def encodeStats(docs: DataFrame, idCol: String, textCol: String,
                   merges: Seq[Merge]): DataFrame = {
-    graft.plans.NativeFunctions.register(docs.sparkSession)
     docs.select(col(idCol),
       size(graft.plans.NativeFunctions.normTokens(col(textCol)))
         .cast("long").as("n_words"),

@@ -86,7 +86,6 @@ object CorpusStats {
     require(n >= 1 && n <= 4,
       s"model vocabulary is alphabet-bounded (<= 37^n) only for n <= 4, got $n")
     val spark = docs.sparkSession
-    graft.plans.NativeFunctions.register(spark)
     val norm = graft.plans.NativeFunctions.normText(col(textCol))
     // model: ONE pass building per-partition count maps bounded by the
     // alphabet, not the corpus (normText emits [a-z0-9 ] → <= 37^n grams,

@@ -29,7 +29,6 @@ object Decontaminate {
   def overlapReport(corpus: DataFrame, corpusId: String, corpusText: String,
                     evalSet: DataFrame, evalId: String, evalText: String,
                     k: Int = 3, w: Int = 4, minShared: Int = 2): DataFrame = {
-    graft.plans.NativeFunctions.register(corpus.sparkSession)
     val cF = corpus.select(col(corpusId),
       explode(TextFunctions.winnowingFingerprint(col(corpusText), k, w)).as("fp"))
     val eF = evalSet
@@ -74,7 +73,6 @@ object Decontaminate {
                              corpusVec: String, evalSet: DataFrame,
                              evalId: String, evalVec: String,
                              minCosine: Double): DataFrame = {
-    graft.plans.NativeFunctions.register(corpus.sparkSession)
     val scored = corpus.select(col(corpusId), col(corpusVec))
       .crossJoin(broadcast(evalSet.select(col(evalId).as("eval_id"),
         col(evalVec).as("__ev"))))

@@ -320,7 +320,6 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         nGram: Int = 3, numHashes: Int = 64): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     df.select(col(idCol),
       NativeFunctions.minhashSig(
         NativeFunctions.normTokens(col(textCol)), nGram, numHashes).as("sig"))
@@ -366,7 +365,6 @@ object Dedup {
     */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
                     textCol: String, nGram: Int): DataFrame = {
-    NativeFunctions.register(docs.sparkSession)
     // shingle only documents that appear in a candidate pair — candidates
     // are a vanishing fraction of the corpus at scale, so the two
     // verification joins see |pairs|-sized inputs, not corpus-sized ones
@@ -461,7 +459,6 @@ object Dedup {
     */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     val sigs = df.select(col(idCol),
       NativeFunctions.simhash64(NativeFunctions.normTokens(col(textCol))).as("sig"))
     val chunks = sigs.select(col(idCol), col("sig"),
@@ -502,7 +499,6 @@ object Dedup {
     */
   def simhashExactDupGroups(df: DataFrame, idCol: String,
                             textCol: String): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     val toks = NativeFunctions.normTokens(col(textCol))
     df.filter(NativeFunctions.normText(col(textCol)) =!= "")
       .select(col(idCol),
@@ -524,7 +520,6 @@ object Dedup {
     */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             blockCol: Column, minCosine: Double): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     val withBlock = df.select(col(idCol), col(vecCol), blockCol.as("__blk"))
     val a = withBlock.select(col("__blk"), col(idCol).as("a"), col(vecCol).as("va"))
     val b = withBlock.select(col("__blk"), col(idCol).as("b"), col(vecCol).as("vb"))
@@ -570,7 +565,6 @@ object Dedup {
                                maxBucket: Int = 1000,
                                targetBucketSize: Int = 0,
                                knownCount: Long = -1L): DataFrame = {
-    NativeFunctions.register(df.sparkSession)
     // knownCount ≥ 0 skips the derivation scan: on a 100 TB corpus the
     // count() would be a full pass before the real one — callers that
     // already know the size (catalog stats, a prior action) pass it in
@@ -733,7 +727,6 @@ object Dedup {
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.plans.NativeFunctions.register(df.sparkSession)
     // ONE fused gram pass (normalize → byte-range md5 per k-gram kernel,
     // empty array below k tokens) and ONE shuffle: the duplicate test is
     // a whole-partition count window over the gram hash — the former

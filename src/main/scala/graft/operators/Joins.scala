@@ -156,11 +156,6 @@ object Joins {
         s"key types differ: ${lk.dataType} vs ${rk.dataType}")
     }
     require(lt.dataType == rt.dataType, s"time types differ: ${lt.dataType} vs ${rt.dataType}")
-    // usable from any session: register the strategy if the session was not
-    // built with GraftExtensions
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     val joined = org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
       graft.plans.AsOfJoinPlan(lplan, rplan, lks, rks, lt, rt,
         isLeftOuter = leftOuter, forward = forward, strict = strict))

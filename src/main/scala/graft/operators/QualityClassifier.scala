@@ -39,7 +39,6 @@ object QualityClassifier {
           dim: Int = 256, sampleN: Int = 1000, epochs: Int = 300,
           lr: Double = 2.0, salt: String = "qc"): Model = {
     require(dim > 0 && sampleN > 0 && epochs >= 0, "bad fit params")
-    graft.plans.NativeFunctions.register(docs.sparkSession)
     val sampled = Sampling.stratifiedExactN(
       docs.select(col(idCol), col(textCol), labelCol.cast(DoubleType).as("__y")),
       lit(1), col(idCol), n = sampleN, salt = salt)

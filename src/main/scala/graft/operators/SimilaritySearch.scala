@@ -41,7 +41,6 @@ object SimilaritySearch {
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
                      queries: DataFrame, qIdCol: String, qVecCol: String,
                      k: Int): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val scored = corpus.select(col(idCol), col(vecCol))
       .crossJoin(broadcast(queries.select(col(qIdCol), col(qVecCol))))
       .filter(col(idCol) =!= col(qIdCol))
@@ -151,7 +150,6 @@ object SimilaritySearch {
     */
   def embeddingClusters(corpus: DataFrame, idCol: String, vecCol: String,
                         k: Int, maxTrain: Int = 20000): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     // partition-INDEPENDENT training sample (hash-first ids, id-ordered):
     // cluster ids must be a pure function of the data, unlike IVF's cell
     // ids where df.sample's per-partition seeding is fine (cells are
@@ -172,7 +170,6 @@ object SimilaritySearch {
     */
   def assignToCentroids(corpus: DataFrame, vecCol: String,
                         centers: Array[Array[Float]]): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     corpus
       .withColumn("__cs", cosToCenters(centers)(col(vecCol)))
       .withColumn("__best", expr(s"element_at($rankedCells, 1)"))
@@ -238,7 +235,6 @@ object SimilaritySearch {
               k: Int, nLists: Int = 16, nProbe: Int = 4,
               trainFraction: Double = 0.05,
               maxTrain: Int = 100000): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val centers = fitCenters(corpus, vecCol, nLists, trainFraction, maxTrain)
     ivfTopKWithCenters(corpus, idCol, vecCol, queries, qIdCol, qVecCol,
       k, centers, nProbe)
@@ -253,7 +249,6 @@ object SimilaritySearch {
                          queries: DataFrame, qIdCol: String, qVecCol: String,
                          k: Int, centers: Array[Array[Float]],
                          nProbe: Int): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val bucketed = assignCells(corpus, vecCol, centers)
     val probes = probeCells(queries, qVecCol, centers, nProbe)
     ivfScoreAndRank(bucketed, idCol, vecCol, probes, qIdCol, qVecCol, k)
@@ -267,7 +262,6 @@ object SimilaritySearch {
   def ivfWrite(corpus: DataFrame, idCol: String, vecCol: String,
                path: String, nLists: Int = 16,
                trainFraction: Double = 0.05, maxTrain: Int = 100000): Unit = {
-    NativeFunctions.register(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val centers = fitCenters(corpus, vecCol, nLists, trainFraction, maxTrain)
@@ -294,7 +288,6 @@ object SimilaritySearch {
                k: Int, nProbe: Int = 4,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
-    NativeFunctions.register(spark)
     val centers = spark.read.parquet(path + "/centers")
       .orderBy("idx").collect()
       .map(_.getAs[scala.collection.Seq[Float]]("center").toArray)
@@ -415,7 +408,6 @@ object SimilaritySearch {
              k: Int, m: Int = 8, ksub: Int = 256,
              trainFraction: Double = 0.05,
              maxTrain: Int = 65536): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val cb = pqFit(corpus, vecCol, m, ksub, trainFraction, maxTrain)
     val codes = corpus.select(col(idCol),
       NativeFunctions.pqEncode(col(vecCol), cb.flat, m, ksub).as("pq_code"))
@@ -438,7 +430,6 @@ object SimilaritySearch {
                 m: Int = 8, ksub: Int = 256,
                 trainFraction: Double = 0.05,
                 maxTrain: Int = 65536): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     // ONE sampling scan + collect feeds both fits (the coarse cells and
     // the PQ codebooks) — two independent trainSample calls would scan
     // the corpus twice for identical data
@@ -458,7 +449,6 @@ object SimilaritySearch {
                              qIdCol: String, qVecCol: String, k: Int,
                              centers: Array[Array[Float]], cb: PqCodebook,
                              nProbe: Int): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val m = cb.m
     val ksub = cb.ksub
     val coded = assignCells(corpus, vecCol, centers)
@@ -487,7 +477,6 @@ object SimilaritySearch {
               queries: DataFrame, qIdCol: String, qVecCol: String,
               k: Int, bits: Int = 12, tables: Int = 4,
               multiProbe: Boolean = true): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     val tableBuckets = (0 until tables).map(t =>
       struct(lit(t).as("tbl"), NativeFunctions.lshBucket(col(vecCol), bits, t).as("bucket")))
     val bucketed = corpus
@@ -524,7 +513,6 @@ object SimilaritySearch {
   def lshTopKWithPlanes(corpus: DataFrame, idCol: String, vecCol: String,
                         queries: DataFrame, qIdCol: String, qVecCol: String,
                         k: Int, planes: Array[Array[Float]]): DataFrame = {
-    NativeFunctions.register(corpus.sparkSession)
     def bucketOf(vec: Column): Column =
       planes.indices.map { i =>
         val p = typedLit(planes(i).map(_.toDouble).toSeq)

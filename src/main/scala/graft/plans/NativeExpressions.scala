@@ -1,6 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -1009,163 +1011,144 @@ case class JaccardSortedLongs(left: Expression, right: Expression)
   override def prettyName: String = "graft_jaccard_sorted"
 }
 
-/** Session registration + Column-level API (via the SQL registry, so no
-  * private Column/Expression bridging is needed).
+/** The kernel function table (injected into every session by
+  * [[GraftExtensions]]) and the Column-level API, which resolves through
+  * the session's function registry, so no private Column/Expression
+  * bridging is needed.
   */
 object NativeFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      e => SimHash64(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_array_cum_sum",
-      e => ArrayCumSum(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_array_difference",
-      e => ArrayDifference(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      e => CosineSimilarity(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lsh_bucket", {
+  val functions: Seq[(String, FunctionBuilder)] = {
+    val table = Seq.newBuilder[(String, FunctionBuilder)]
+    def f(name: String)(builder: FunctionBuilder): Unit = table += name -> builder
+    f("graft_simhash64")(e => SimHash64(e.head))
+    f("graft_array_cum_sum")(e => ArrayCumSum(e.head))
+    f("graft_array_difference")(e => ArrayDifference(e.head))
+    f("graft_cosine")(e => CosineSimilarity(e(0), e(1)))
+    f("graft_lsh_bucket") {
       case Seq(v, Literal(bits: Int, IntegerType), Literal(seed: Int, IntegerType)) =>
         LshBucket(v, bits, seed)
       case Seq(v, Literal(bits: Int, IntegerType)) => LshBucket(v, bits)
       case e => LshBucket(e.head, 16)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles", {
+    }
+    f("graft_shingles") {
       case Seq(v, Literal(n: Int, IntegerType)) => Shingles(v, n)
       case e => Shingles(e.head, 3)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes", {
+    }
+    f("graft_shingle_hashes") {
       case Seq(v, Literal(n: Int, IntegerType)) => ShingleHashes(v, n)
       case e => ShingleHashes(e.head, 3)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard_sorted",
-      e => JaccardSortedLongs(e(0), e(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_lang_id",
-      e => LangIdVote(e.head, graft.functions.TextFunctions.LangMarkers), "built-in")
-    reg.createOrReplaceTempFunction("graft_norm_text",
-      e => NormText(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      e => NfcNormalize(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_norm_tokens",
-      e => NormTokens(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_double_bits",
-      e => SortableDoubleBits(e.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_hashing_tf", {
+    }
+    f("graft_jaccard_sorted")(e => JaccardSortedLongs(e(0), e(1)))
+    f("graft_lang_id")(e => LangIdVote(e.head, graft.functions.TextFunctions.LangMarkers))
+    f("graft_norm_text")(e => NormText(e.head))
+    f("graft_nfc")(e => NfcNormalize(e.head))
+    f("graft_norm_tokens")(e => NormTokens(e.head))
+    f("graft_double_bits")(e => SortableDoubleBits(e.head))
+    f("graft_hashing_tf") {
       case Seq(v, Literal(dim: Int, IntegerType)) => HashingTf(v, dim)
       case e => HashingTf(e.head, 64)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_gram_md5", {
+    }
+    f("graft_gram_md5") {
       case Seq(v, Literal(k: Int, IntegerType)) => GramMd5(v, k)
       case e => GramMd5(e.head, 5)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow_fp", {
+    }
+    f("graft_winnow_fp") {
       case Seq(v, Literal(k: Int, IntegerType), Literal(w: Int, IntegerType)) =>
         WinnowFingerprint(v, k, w)
       case e => WinnowFingerprint(e.head, 3, 4)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_round_even", {
+    }
+    f("graft_round_even") {
       case Seq(v, Literal(s: Int, IntegerType)) => RoundHalfEvenExact(v, s)
       case e => RoundHalfEvenExact(e.head, 2)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig", {
+    }
+    f("graft_minhash_sig") {
       case Seq(v, Literal(n: Int, IntegerType), Literal(k: Int, IntegerType)) =>
         MinHashSig(v, n, k)
       case e => MinHashSig(e.head, 3, 64)
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode", {
+    }
+    f("graft_pq_encode") {
       case Seq(v, Literal(cb: ArrayData, org.apache.spark.sql.types.ArrayType(
              org.apache.spark.sql.types.FloatType, _)),
            Literal(m: Int, IntegerType), Literal(ksub: Int, IntegerType)) =>
         PqEncode(v, cb.toFloatArray(), m, ksub)
       case e => throw new IllegalArgumentException(
         s"graft_pq_encode(vec, codebook literal, m, ksub); got ${e.size} args")
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc",
-      e => PqAdcScore(e(0), e(1), e(2), e(3)), "built-in")
+    }
+    f("graft_pq_adc")(e => PqAdcScore(e(0), e(1), e(2), e(3)))
     // Spark's own runtime-filter machinery, exposed as a first-class
     // surface: the aggregate builds one binary bloom blob over
     // xxhash64(key) with partial aggregation (map-side bit-OR merges);
     // might_contain tests a key against the blob. Both sides hash with
     // the same XxHash64 seed, so routing is symmetric by construction.
-    reg.createOrReplaceTempFunction("graft_bloom_agg", {
+    f("graft_bloom_agg") {
       case Seq(v, n @ Literal(_: Long, LongType), bits @ Literal(_: Long, LongType)) =>
         new aggregate.BloomFilterAggregate(new XxHash64(Seq(v)), n, bits)
       case e => throw new IllegalArgumentException(
         s"graft_bloom_agg(key, expectedItems literal, numBits literal); got ${e.size} args")
-    }, "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_might_contain",
-      e => BloomFilterMightContain(e(0), new XxHash64(Seq(e(1)))), "built-in")
-  }
-
-  /** Column wrappers resolve through the session function registry, so a
-    * vanilla SparkSession (not built by GraftSession.create) would fail
-    * analysis with UNRESOLVED_ROUTINE. Self-register on the active
-    * session at Column-construction time — registration is idempotent
-    * and driver-side only, so the cost is a few map upserts per built
-    * query.
-    */
-  private def cf(name: String, args: Column*): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    org.apache.spark.sql.functions.call_function(name, args: _*)
+    }
+    f("graft_bloom_might_contain")(
+      e => BloomFilterMightContain(e(0), new XxHash64(Seq(e(1)))))
+    table.result()
   }
 
   def doubleBits(c: Column): Column =
-    cf("graft_double_bits", c)
+    call_function("graft_double_bits", c)
   def hashingTf(c: Column, dim: Int): Column =
-    cf("graft_hashing_tf", c,
+    call_function("graft_hashing_tf", c,
       org.apache.spark.sql.functions.lit(dim))
   def gramMd5(c: Column, k: Int): Column =
-    cf("graft_gram_md5", c,
+    call_function("graft_gram_md5", c,
       org.apache.spark.sql.functions.lit(k))
   def winnowFp(c: Column, k: Int, w: Int): Column =
-    cf("graft_winnow_fp", c,
+    call_function("graft_winnow_fp", c,
       org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))
   def roundEven(c: Column, scale: Int = 2): Column =
-    cf("graft_round_even", c,
+    call_function("graft_round_even", c,
       org.apache.spark.sql.functions.lit(scale))
   def simhash64(c: Column): Column =
-    cf("graft_simhash64", c)
+    call_function("graft_simhash64", c)
   def arrayCumSum(c: Column): Column =
-    cf("graft_array_cum_sum", c.cast("array<double>"))
+    call_function("graft_array_cum_sum", c.cast("array<double>"))
   def arrayDifference(c: Column): Column =
-    cf("graft_array_difference", c.cast("array<double>"))
+    call_function("graft_array_difference", c.cast("array<double>"))
   def cosine(a: Column, b: Column): Column =
-    cf("graft_cosine", a, b)
+    call_function("graft_cosine", a, b)
   def langId(tokens: Column): Column =
-    cf("graft_lang_id", tokens)
+    call_function("graft_lang_id", tokens)
   def normText(c: Column): Column =
-    cf("graft_norm_text", c)
+    call_function("graft_norm_text", c)
   def normTokens(c: Column): Column =
-    cf("graft_norm_tokens", c)
+    call_function("graft_norm_tokens", c)
   def nfcNormalize(c: Column): Column =
-    cf("graft_nfc", c)
+    call_function("graft_nfc", c)
   def minhashSig(tokens: Column, n: Int, k: Int): Column =
-    cf("graft_minhash_sig", tokens,
+    call_function("graft_minhash_sig", tokens,
       org.apache.spark.sql.functions.lit(n), org.apache.spark.sql.functions.lit(k))
   def shingles(c: Column, n: Int): Column =
-    cf("graft_shingles", c,
+    call_function("graft_shingles", c,
       org.apache.spark.sql.functions.lit(n))
   def shingleHashes(c: Column, n: Int): Column =
-    cf("graft_shingle_hashes", c,
+    call_function("graft_shingle_hashes", c,
       org.apache.spark.sql.functions.lit(n))
   def jaccardSorted(a: Column, b: Column): Column =
-    cf("graft_jaccard_sorted", a, b)
+    call_function("graft_jaccard_sorted", a, b)
   def lshBucket(c: Column, bits: Int, seed: Int = 0): Column =
-    cf("graft_lsh_bucket", c,
+    call_function("graft_lsh_bucket", c,
       org.apache.spark.sql.functions.lit(bits),
       org.apache.spark.sql.functions.lit(seed))
   def pqEncode(c: Column, codebook: Array[Float], m: Int, ksub: Int): Column =
-    cf("graft_pq_encode", c,
+    call_function("graft_pq_encode", c,
       org.apache.spark.sql.functions.typedlit(codebook.toSeq),
       org.apache.spark.sql.functions.lit(m),
       org.apache.spark.sql.functions.lit(ksub))
   def pqAdc(codes: Column, lutDot: Column, lutSq: Column, qNorm: Column): Column =
-    cf("graft_pq_adc",
+    call_function("graft_pq_adc",
       codes, lutDot, lutSq, qNorm)
   def bloomAgg(key: Column, expectedItems: Long, numBits: Long): Column =
-    cf("graft_bloom_agg", key,
+    call_function("graft_bloom_agg", key,
       org.apache.spark.sql.functions.lit(expectedItems),
       org.apache.spark.sql.functions.lit(numBits))
   def bloomMightContain(bloom: Column, key: Column): Column =
-    cf("graft_bloom_might_contain",
+    call_function("graft_bloom_might_contain",
       bloom, key)
 }

@@ -2,9 +2,11 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Divide, Expression, HllSketchEstimate, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Divide, Expression, ExpressionInfo, HllSketchEstimate, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, HllSketchAgg, HllUnionAgg, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -212,14 +214,26 @@ class ProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions` entry point: projection routing + the graft
-  * native function surface, available without any GraftSession helper.
+/** `spark.sql.extensions` entry point: projection routing, the AsOf join
+  * strategy, the boolean coercion rule and the whole graft SQL function
+  * surface, injected once when a session is built. `source` is the
+  * `ExpressionInfo` tag DESCRIBE FUNCTION reports for each table.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(session => new ProjectionRewrite(session))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectResolutionRule(_ => BoolNumericCoercion)
+    def inject(source: String, table: Seq[(String, FunctionBuilder)]): Unit =
+      table.foreach { case (name, builder) =>
+        val info = new ExpressionInfo(builder.getClass.getCanonicalName, null, name,
+          null, "", "", "", "", "", "", source)
+        e.injectFunction((FunctionIdentifier(name), info, builder))
+      }
+    inject("built-in", NativeFunctions.functions)
+    inject("scala_udf", graft.functions.ChRegistry.functions)
+    inject("sql_udf", graft.functions.ChRegistry.macros)
+    inject("scala_udf", graft.functions.StateSqlRegistry.functions)
   }
 }
 

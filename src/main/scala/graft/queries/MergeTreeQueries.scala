@@ -123,7 +123,7 @@ object MergeTreeQueries {
     // per-column value counts, compressed/uncompressed bytes and codec from
     // parquet FOOTERS, read on the executors. The oracle is DuckDB's
     // parquet_metadata() over the SAME file — byte-for-byte footer parity
-    // across engines. `{SF_DIR}` is resolved by Verify/DevVerify to the
+    // across engines. `{SF_DIR}` is resolved by Verify to the
     // dir being verified (SparkEntry.oracleSqlFor), so the row is
     // SF-portable.
     Q("q62_parts_columns",

@@ -394,7 +394,6 @@ object MiscQueries {
         |       ELSE printf('%.2f', q) END AS readable
         |FROM (SELECT o_orderkey, CAST(FLOOR(o_totalprice) * 31337 AS DOUBLE) AS q FROM orders)
         |ORDER BY o_orderkey LIMIT 50""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s) // formatters use graft_round_even
       Tables(s, dir).orders
         .select(col("o_orderkey"),
           (floor(col("o_totalprice")) * 31337).cast(DoubleType).as("q"))
@@ -494,7 +493,6 @@ object MiscQueries {
         |       ELSE printf('%.2f B', CAST(b AS DOUBLE)) END AS readable
         |FROM (SELECT o_orderkey, CAST(FLOOR(o_totalprice * 1024) AS BIGINT) AS b FROM orders)
         |ORDER BY o_orderkey LIMIT 50""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s) // formatters use graft_round_even
       Tables(s, dir).orders
         .select(col("o_orderkey"),
           floor(col("o_totalprice") * 1024).cast(LongType).as("b"))
@@ -618,7 +616,6 @@ object MiscQueries {
         |  lower(n_name) AS lo,
         |  substr(n_name, 2, 3) AS sub
         |FROM nation ORDER BY n_name""") { (s, dir) =>
-      graft.functions.ChRegistry.registerAll(s)
       Tables(s, dir).nation.createOrReplaceTempView("q64_nation")
       s.sql(
         """SELECT n_name,
@@ -676,7 +673,6 @@ object MiscQueries {
         |  CAST(d + INTERVAL 2 MONTH AS DATE) AS plus2m,
         |  date_diff('day', d, DATE '1998-12-31') AS to_end
         |FROM o ORDER BY o_orderkey""") { (s, dir) =>
-      graft.functions.ChRegistry.registerAll(s)
       Tables(s, dir).orders.filter(col("o_custkey") < 50)
         .createOrReplaceTempView("q66_orders")
       s.sql(
@@ -737,7 +733,6 @@ object MiscQueries {
         |  coalesce(array_to_string(asl2, ','), '') AS asl2,
         |  asum, aprod, aavg, amin, amax
         |FROM v ORDER BY k""") { (s, dir) =>
-      graft.functions.ChRegistry.registerAll(s)
       Tables(s, dir).nation
         .select(col("n_nationkey").cast(LongType).as("k"))
         .createOrReplaceTempView("q67_nation")
@@ -975,7 +970,6 @@ object MiscQueries {
         |    ELSE (CAST(1 AS BIGINT) << CAST(floor(log2(user_id + 1)) AS INT))
         |    END AS r2
         |FROM w ORDER BY user_id, event_type""") { (s, dir) =>
-      graft.functions.ChRegistry.registerAll(s)
       Tables(s, dir).events.filter(col("user_id") < 40)
         .select(col("user_id"), col("event_type")).distinct()
         .createOrReplaceTempView("q73_u")
@@ -1053,7 +1047,6 @@ object MiscQueries {
         |    cos(radians(lat)) * cos(radians(55.75)) *
         |    pow(sin(radians(37.62 - lon) / 2), 2)))), 4) AS angle_deg
         |FROM s ORDER BY s_suppkey""") { (s, dir) =>
-      graft.functions.ChRegistry.registerAll(s)
       Tables(s, dir).supplier.createOrReplaceTempView("q75_supplier")
       s.sql(
         """WITH s AS (SELECT s_suppkey,
@@ -1358,7 +1351,6 @@ object MiscQueries {
         |  array_to_string(list_transform(df,
         |    x -> CAST(CAST(round(x, 4) + 0.0 AS DECIMAL(18,4)) AS VARCHAR)), ',') AS diffs
         |FROM c ORDER BY l_orderkey""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       def dec(c: Column) = concat_ws(",",
         transform(c, x => (round(x, 4) + lit(0.0))
           .cast("decimal(18,4)").cast(StringType)))

@@ -67,7 +67,6 @@ object PipelineQueries {
     */
   private def bandedJaccardPairs(s: org.apache.spark.sql.SparkSession,
                                  dir: String): org.apache.spark.sql.DataFrame = {
-    graft.plans.NativeFunctions.register(s)
     val docs = Tables(s, dir).documents
     // sorted xxhash64 token fingerprints + linear-merge jaccard — same
     // values as the string-set spelling (collisions ~n²/2⁶⁴ per pair)
@@ -166,7 +165,6 @@ object PipelineQueries {
       s"""WITH f AS (SELECT doc_id, md5($normSql) AS fingerprint FROM documents)
          |SELECT fingerprint, MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
          |FROM f GROUP BY fingerprint ORDER BY keep_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       Tables(s, dir).documents
         .groupBy(md5(graft.plans.NativeFunctions.normText(col("text"))).as("fingerprint"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
@@ -180,7 +178,6 @@ object PipelineQueries {
          |       ELSE len(${toksSql(normSql)}) END AS n_tokens,
          |  LENGTH(text) AS n_chars_actual
          |FROM documents ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       Tables(s, dir).documents
         .select(col("doc_id"),
           md5(graft.plans.NativeFunctions.normText(col("text"))).as("fingerprint"),
@@ -602,7 +599,6 @@ object PipelineQueries {
          |  FROM c)
          |SELECT lang, predicted, COUNT(*) AS n
          |FROM p GROUP BY lang, predicted ORDER BY lang, predicted""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       Tables(s, dir).documents
         .select(col("lang"), graft.plans.NativeFunctions.langId(
           graft.plans.NativeFunctions.normTokens(col("text"))).as("predicted"))
@@ -626,7 +622,6 @@ object PipelineQueries {
          |  (0.5 * (CAST(stop_cnt AS DOUBLE) / greatest(CAST(n_tokens AS DOUBLE), 1.0)) +
          |   0.5 * (CAST(alpha_len AS DOUBLE) / CAST(greatest(LENGTH(text), 1) AS DOUBLE))) AS score
          |FROM b ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       val toks = graft.plans.NativeFunctions.normTokens(col("text"))
       val sw = array(TextFunctions.DefaultStopwords.map(lit): _*)
       val nTok = size(toks).cast(DoubleType)
@@ -651,7 +646,6 @@ object PipelineQueries {
          |  CASE WHEN $normSql = '' THEN 0 ELSE len(${toksSql(normSql)}) END AS ws_tokens,
          |  len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS bpeish_tokens
          |FROM documents ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       Tables(s, dir).documents
         .select(col("doc_id"),
           size(graft.plans.NativeFunctions.normTokens(col("text"))).as("ws_tokens"),
@@ -675,7 +669,6 @@ object PipelineQueries {
          |        ln(CAST(n.n_docs AS DOUBLE) / df.df), 4) AS tfidf4
          |FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN n
          |ORDER BY doc_id, term""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       CorpusStats.tfidf(Tables(s, dir).documents, "doc_id",
           graft.plans.NativeFunctions.normTokens(col("text")))
         .select(col("doc_id"), col("term"), col("tf_count"), col("df"),
@@ -701,7 +694,6 @@ object PipelineQueries {
          |  strt // 512 AS seq_id, strt % 512 AS seq_offset,
          |  (strt + greatest(n_tokens, 1) - 1) // 512 AS end_seq_id
          |FROM s ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       val docs = Tables(s, dir).documents
         .select(col("doc_id"), TextFunctions.bpeishTokenCount(col("text")).as("tok"))
       Packing.concatChunk(docs, "doc_id", "tok", budget = 512)
@@ -731,7 +723,6 @@ object PipelineQueries {
          |  FROM sp)
          |SELECT seq_id, seq_off, doc_id, doc_off, len
          |FROM sl WHERE len > 0 ORDER BY seq_id, seq_off""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       val docs = Tables(s, dir).documents
         .select(col("doc_id"), TextFunctions.bpeishTokenCount(col("text")).as("tok"))
       Packing.packedSlices(
@@ -1033,7 +1024,6 @@ object PipelineQueries {
          |  lang, count(*) AS n_docs,
          |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens
          |FROM s GROUP BY 1, 2 ORDER BY split, lang""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       val toks = graft.plans.NativeFunctions.normTokens(col("text"))
       val enriched = Tables(s, dir).documents
         .select(col("doc_id"), col("text"),
@@ -1065,7 +1055,6 @@ object PipelineQueries {
         |  length(nfc_normalize(t)) AS len_nfc,
         |  md5(nfc_normalize(t)) AS nfc_md5
         |FROM e ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       // decomposed on purpose: e + U+0301, o + U+0303 (mirrors the
       // oracle's chr() appends); NFC composes both
       val t = concat(col("text"), lit(" cafe\u0301 nino\u0303"))
@@ -1174,7 +1163,6 @@ object PipelineQueries {
          |      LEFT JOIN c ON c.doc_id = g.doc_id AND c.bkt = g.i)
          |SELECT doc_id, string_agg(CAST(c AS VARCHAR), ',' ORDER BY i) AS tf
          |FROM d GROUP BY doc_id ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       // driver compat: the tf vector is serialized in the declared output
       // (pandas sort can't handle array cells); hashingTf itself stays
       // array-typed for downstream model use
@@ -1274,7 +1262,6 @@ object PipelineQueries {
          |             (tf.tf + 1.2 * (1 - 0.75 + 0.75 * tf.dl / s.avgdl))) AS score
          |       FROM tf JOIN df USING (term) CROSS JOIN s GROUP BY 1)
          |SELECT doc_id, round(score, 4) AS score4 FROM sc ORDER BY doc_id""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       InvertedIndex.bm25Rank(Tables(s, dir).documents, col("doc_id"),
           graft.plans.NativeFunctions.normTokens(col("text")),
           Seq("hash", "merge", "vector"))
@@ -1485,7 +1472,6 @@ object PipelineQueries {
          |       FROM tf JOIN df USING (term) CROSS JOIN s GROUP BY 1, 2)
          |SELECT doc_id, chunk_id, round(score, 4) AS score4 FROM sc
          |ORDER BY score4 DESC, doc_id, chunk_id LIMIT 20""") { (s, dir) =>
-      graft.plans.NativeFunctions.register(s)
       val chunks = Packing.chunkByTokens(
           Tables(s, dir).documents.filter(trim(col("text")) =!= ""),
           "doc_id", "text", maxTokens = 48, overlap = 8)

@@ -106,7 +106,6 @@ object StreamingPipeline {
   def curated(stream: DataFrame, textCol: String, tsCol: String,
               watermark: String, minQuality: Double,
               langs: Seq[String]): DataFrame = {
-    graft.plans.NativeFunctions.register(stream.sparkSession)
     val toks = graft.plans.NativeFunctions.normTokens(col(textCol))
     stream
       .withColumn("lang", graft.plans.NativeFunctions.langId(toks))

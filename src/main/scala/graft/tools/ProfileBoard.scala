@@ -1,18 +1,19 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, struct, xxhash64}
 
-/** Optimization-round profiler: runs selected registry queries with the
-  * bench's exact session + checksum action and reports, per query, the
-  * wall seconds, the number of Spark JOBS (actions) it launched, the
-  * number of stages and tasks, and total shuffle bytes — the fixed-cost
-  * fingerprint that the sf0.1 board is dominated by.
+import graft.Bench.{checksum, resetState}
+
+/** The profiler: runs selected registry queries with the bench's exact
+  * session + checksum action and reports, per query, the wall seconds,
+  * the number of Spark JOBS (actions) it launched, the number of stages
+  * and tasks, and total shuffle bytes — the fixed-cost fingerprint that
+  * the sf0.1 board is dominated by.
   *
   * Usage: SPARK_GRAFT_PROFILE_ONLY=q01,q03 sbt "runMain graft.tools.ProfileBoard"
-  * (no ONLY = whole board). SPARK_GRAFT_PROFILE_EXPLAIN=1 additionally
-  * writes each query's .explain("formatted") to /tmp/graft_plans/<name>.txt.
+  * (no ONLY = whole board; SPARK_GRAFT_CPUS sets local[N], default 4).
+  * SPARK_GRAFT_PROFILE_EXPLAIN=1 additionally writes each query's
+  * .explain("formatted") to /tmp/graft_plans/<name>.txt.
   */
 object ProfileBoard {
 
@@ -37,29 +38,9 @@ object ProfileBoard {
     }
   }
 
-  private def checksum(df: DataFrame): Unit = {
-    df.select(xxhash64(struct(df.columns.map(col): _*)).as("__h"))
-      .selectExpr("bit_xor(__h)")
-      .collect()
-    ()
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "4096"))
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session()
     val listener = new Counts
     spark.sparkContext.addSparkListener(listener)
 
@@ -72,11 +53,6 @@ object ProfileBoard {
     val passes = sys.env.get("SPARK_GRAFT_PROFILE_PASSES")
       .flatMap(_.toIntOption).getOrElse(2)
     if (wantExplain) new java.io.File("/tmp/graft_plans").mkdirs()
-    def resetState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
     val picked = graft.SparkEntry.queries
       .filter(kv => only.forall(_.contains(kv._1))).toSeq.sortBy(_._1)
     println("name,sec,jobs,stages,tasks,shuffle_read_mb,shuffle_write_mb")
@@ -100,7 +76,7 @@ object ProfileBoard {
             line = s"$name,ERROR,${t.getClass.getSimpleName}"
             best = -1
         }
-        resetState()
+        resetState(spark)
       }
       println(line)
       if (wantExplain && best >= 0) {

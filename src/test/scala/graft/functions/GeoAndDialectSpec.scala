@@ -5,10 +5,7 @@ import graft.SparkSpec
 class GeoAndDialectSpec extends SparkSpec {
   import spark.implicits._
 
-  private def one(sql: String): org.apache.spark.sql.Row = {
-    ChRegistry.registerAll(spark)
-    spark.sql(sql).head()
-  }
+  private def one(sql: String): org.apache.spark.sql.Row = spark.sql(sql).head()
 
   test("greatCircleDistance: known city pair within 0.5% of the published value") {
     // Moscow (37.62, 55.75) to Saint Petersburg (30.31, 59.94) ~ 634 km
@@ -22,7 +19,6 @@ class GeoAndDialectSpec extends SparkSpec {
   }
 
   test("pointInPolygon: convex, concave, and outside cases") {
-    ChRegistry.registerAll(spark)
     def pip(px: Double, py: Double, xs: Seq[Double], ys: Seq[Double]): Int = {
       val xsS = xs.mkString("array(", "d,", "d)")
       val ysS = ys.mkString("array(", "d,", "d)")
@@ -43,7 +39,6 @@ class GeoAndDialectSpec extends SparkSpec {
   }
 
   test("simpleLinearRegression recovers an exact linear fit") {
-    ChRegistry.registerAll(spark)
     Seq((1.0, 3.0), (2.0, 5.0), (3.0, 7.0), (4.0, 9.0)).toDF("x", "y")
       .createOrReplaceTempView("t_slr")
     val r = spark.sql(
@@ -54,7 +49,6 @@ class GeoAndDialectSpec extends SparkSpec {
   }
 
   test("hashingTf: counts sum to token count, deterministic, null-safe") {
-    graft.plans.NativeFunctions.register(spark)
     val df = Seq(
       (1L, Seq("a", "b", "a", "c")),
       (2L, Seq[String]()),
@@ -87,7 +81,6 @@ class GeoAndDialectSpec extends SparkSpec {
   }
 
   test("cramersV: perfect association is 1, independence near 0") {
-    ChRegistry.registerAll(spark)
     import graft.functions.StatAggregates.cramersV
     // perfectly dependent: b == a
     val dep = (0 until 100).map(i => (s"c${i % 4}", s"c${i % 4}"))
@@ -117,5 +110,23 @@ class GeoAndDialectSpec extends SparkSpec {
     assert(one("SELECT transform(array(1, 2), x -> x + 1)")
       .getSeq[Int](0) == Seq(2, 3))
     assert(one("SELECT bar(5d, 0d, 10d, 10)").getString(0).length == 5)
+  }
+
+  test("countIf counts the rows whose condition is true; false and NULL " +
+    "conditions count nothing, through spark.sql and ChSession") {
+    Seq[(Int, Option[Int])]((1, Some(1)), (2, Some(1)), (3, Some(1)), (4, Some(0)),
+      (5, None))
+      .toDF("id", "v").createOrReplaceTempView("t_count_if")
+    val r = one("SELECT countIf(v = 1), countIf(v = 0), countIf(v IS NULL) " +
+      "FROM t_count_if")
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((3L, 1L, 1L)))
+
+    val ch = new graft.chsql.ChSession(spark)
+    ch.execute("CREATE TABLE count_if_t (id UInt8, v Nullable(UInt8)) " +
+      "ENGINE = Memory; " +
+      "INSERT INTO count_if_t VALUES (1, 1), (2, 1), (3, 1), (4, 0), (5, NULL)")
+    val c = ch.execute("SELECT countIf(v = 1) AS t, countIf(v = 0) AS f, " +
+      "countIf(v IS NULL) AS n FROM count_if_t").last.head()
+    assert((c.getLong(0), c.getLong(1), c.getLong(2)) == ((3L, 1L, 1L)))
   }
 }

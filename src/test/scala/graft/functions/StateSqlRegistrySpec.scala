@@ -13,8 +13,6 @@ import graft.SparkSpec
 class StateSqlRegistrySpec extends SparkSpec {
   import spark.implicits._
 
-  graft.functions.StateSqlRegistry.register(spark)
-
   test("uniq/avg/sum/maxIf: part-split states merge to the direct answer " +
       "for any split") {
     val rnd = new scala.util.Random(42)
@@ -79,7 +77,6 @@ class StateSqlRegistrySpec extends SparkSpec {
     // value set on one reducer. The cap converts the would-be OOM on a
     // huge-cardinality group into a dialect error naming the HLL
     // alternative.
-    StateSqlRegistry.register(spark)
     System.setProperty("graft.uniq_exact_state.max_size", "1000")
     try {
       val err = intercept[Exception] {

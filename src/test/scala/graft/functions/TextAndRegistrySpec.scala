@@ -30,7 +30,6 @@ class TextAndRegistrySpec extends SparkSpec {
   }
 
   test("normText/normTokens kernels match the regex definition on corpus + edges") {
-    graft.plans.NativeFunctions.register(spark)
     val edges = Seq("Hello, World! 123", "", "  a  b ", "ab", "A-B_C.9",
       "...", "x" * 5000).toDF("text")
     val docs = graft.tables.Tables(spark, sfDir).documents.select("text")
@@ -46,7 +45,6 @@ class TextAndRegistrySpec extends SparkSpec {
   }
 
   test("native langId kernel matches the composed-functions definition") {
-    graft.plans.NativeFunctions.register(spark)
     val docs = graft.tables.Tables(spark, sfDir).documents
     val both = docs.select(
       TextFunctions.langId($"text").as("composed"),
@@ -134,7 +132,6 @@ class TextAndRegistrySpec extends SparkSpec {
 
   test("shingleHashes + jaccardSorted match the string-set jaccard exactly") {
     import graft.plans.NativeFunctions
-    NativeFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val docs = (1L to 60L).map { i =>
       (i, Seq.fill(5 + rnd.nextInt(40))(s"w${rnd.nextInt(30)}").mkString(" "))

@@ -72,7 +72,6 @@ class DedupSpec extends SparkSpec {
     // and the premise of the md5 tie-break really holds: 4 and 5 DO
     // share a signature
     import graft.plans.NativeFunctions
-    NativeFunctions.register(spark)
     val sigs = Seq((4L, "spam ham"), (5L, "spam ham spam ham"))
       .toDF("doc_id", "text")
       .select(NativeFunctions.simhash64(

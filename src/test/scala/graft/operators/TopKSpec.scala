@@ -9,7 +9,6 @@ class TopKSpec extends SparkSpec {
   import spark.implicits._
 
   test("TopK.perGroup equals the row_number window formulation") {
-    graft.plans.NativeFunctions.register(spark)
     val emb = Tables(spark, sfDir).embeddings
     val queries = emb.filter($"vec_id" < 7)
       .select($"vec_id".as("query_id"), $"embedding".as("qv"))

@@ -59,7 +59,6 @@ class PlanAuditSpec extends SparkSpec {
   test("d03c candidates: the signature+window exchange computes once and " +
     "is REUSED for both self-join sides (the spelling minhashCandidatePairs " +
     "keeps a window for)") {
-    graft.plans.NativeFunctions.register(spark)
     val docs = graft.tables.Tables(spark, sfDir).documents
     val sigs = graft.operators.Dedup.minhashSignatures(
       docs, "doc_id", "text", 3, 64)
