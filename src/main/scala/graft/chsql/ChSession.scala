@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.mergetree.FoldViews
 import graft.operators.LimitBy
+import graft.plans.ChJoinDefaults
 import graft.sources.Formats
 
 import scala.collection.mutable
@@ -925,7 +926,8 @@ final class ChSession(val spark: SparkSession,
         val newCols =
           (t.columns.take(insertAt) :+ cd) ++ t.columns.drop(insertAt)
         val withCol = tableDf(t).withColumn(cd.name,
-          cd.default.map(expr).getOrElse(typeZero(cd.dataType)).cast(cd.dataType))
+          cd.default.map(expr).getOrElse(ChTypes.defaultColumn(cd.dataType))
+            .cast(cd.dataType))
           .select(newCols.map(c => col(s"`${c.name}`")): _*)
         val withColMat =
           if (t.path.isDefined) withCol.localCheckpoint() else withCol
@@ -1217,7 +1219,7 @@ final class ChSession(val spark: SparkSession,
         }.toSeq: _*)
       case "jsoneachrow" =>
         // a JSON object omitting a field yields NULL from the reader; a
-        // ClickHouse non-Nullable column takes its DEFAULT / type zero
+        // ClickHouse non-Nullable column takes its DEFAULT / type default
         // instead (input_format_defaults_for_omitted_fields)
         val raw = spark.read.json(lines)
         val present = raw.columns.map(c => c.toLowerCase -> c).toMap
@@ -1225,7 +1227,7 @@ final class ChSession(val spark: SparkSession,
           present.get(c.name.toLowerCase) match {
             case Some(src) if !c.nullable =>
               df.withColumn(src, coalesce(col(src),
-                c.default.map(expr).getOrElse(typeZero(c.dataType))
+                c.default.map(expr).getOrElse(ChTypes.defaultColumn(c.dataType))
                   .cast(c.dataType)))
             case _ => df
           }
@@ -1343,7 +1345,7 @@ final class ChSession(val spark: SparkSession,
     }
   }
 
-  /** Missing columns get DEFAULT expr or the ClickHouse type-zero;
+  /** Missing columns get DEFAULT expr or the ClickHouse type default;
     * MATERIALIZED columns always recompute; present columns cast to the
     * declared type.
     */
@@ -1358,7 +1360,7 @@ final class ChSession(val spark: SparkSession,
         case None => src match {
           case Some(s) => col(s)
           case None => c.default.map(expr).getOrElse(
-            if (c.nullable) lit(null) else typeZero(c.dataType))
+            ChTypes.defaultColumn(c.dataType, c.nullable))
         }
       }
       e.cast(c.dataType).as(c.name)
@@ -1371,15 +1373,19 @@ final class ChSession(val spark: SparkSession,
     block.select(cols ++ extras: _*)
   }
 
-  private def typeZero(dt: DataType): Column = dt match {
-    case _: IntegerType | _: LongType | _: FloatType | _: DoubleType |
-         _: DecimalType => lit(0)
-    case _: StringType => lit("")
-    case _: BooleanType => lit(false)
-    case _: DateType => lit("1970-01-01").cast(DateType)
-    case _: TimestampType => lit(0).cast(TimestampType)
-    case ArrayType(et, _) => array().cast(dt)
-    case _ => lit(null)
+  /** `t`'s view with its Nullable(T) columns marked in the column
+    * metadata ([[ChJoinDefaults.NullableKey]]): the outer-join fill
+    * keeps their NULLs. A table without Nullable columns reads as is.
+    */
+  private def declared(t: ChTable, df: DataFrame): DataFrame = {
+    val nullable = t.columns.filter(_.nullable).map(_.name.toLowerCase).toSet
+    if (nullable.isEmpty) df
+    else df.select(df.columns.toSeq.map { n =>
+      val c = col("`" + n.replace("`", "``") + "`")
+      if (nullable(n.toLowerCase)) c.as(n, new MetadataBuilder()
+        .putBoolean(ChJoinDefaults.NullableKey, true).build())
+      else c
+    }: _*)
   }
 
   // ------------------------------------------------------ SELECT
@@ -1415,7 +1421,8 @@ final class ChSession(val spark: SparkSession,
         overrides.get(ref) match {
           case Some(block) =>
             val v = viewName(ref) + "__block"
-            dropSeq(block).createOrReplaceTempView(v)
+            val df = dropSeq(block)
+            tables.get(ref).fold(df)(declared(_, df)).createOrReplaceTempView(v)
             return Some(ChSqlRewrite.ResolvedTable(v))
           case None =>
         }
@@ -1429,9 +1436,9 @@ final class ChSession(val spark: SparkSession,
         tables.get(ref).map { t =>
           val base = viewName(ref)
           val df = if (wantsVirtual) virtualDf(t) else tableDf(t)
-          df.createOrReplaceTempView(base)
+          declared(t, df).createOrReplaceTempView(base)
           val fin = base + "__final"
-          finalDf(t).createOrReplaceTempView(fin)
+          declared(t, finalDf(t)).createOrReplaceTempView(fin)
           ChSqlRewrite.ResolvedTable(base, Some(fin), sampleKey(t))
         }.orElse {
           // SELECT from an MV reads its target table — ClickHouse
@@ -1486,8 +1493,8 @@ final class ChSession(val spark: SparkSession,
             .map(f => ChTypes.defaultLiteralSql(f.dataType, nullable = true)))
 
       // ONE analysis round-trip per distinct subquery text per
-      // statement, shared by all three hooks (the defaults, ANTI and
-      // ASOF passes may each probe the same side); per-statement
+      // statement, shared by all three hooks (the ANTI, ASOF and
+      // LEFT SEMI passes may each probe the same side); per-statement
       // scope, so a later DDL can never serve a stale schema
       private val subDfCache = mutable.Map
         .empty[String, Option[org.apache.spark.sql.DataFrame]]
@@ -1610,6 +1617,7 @@ final class ChSession(val spark: SparkSession,
     }
     val rw = ChSqlRewrite.rewrite(query, resolver)
     var df = spark.sql(rw.sql)
+    if (!rw.joinUseNulls) df = ChJoinDefaults(df)
     rw.limitBy.foreach { lb =>
       val order = lb.orderSql match {
         case Some(o) => ChTypes.splitTopLevel(o).map(parseOrderCol)

@@ -14,7 +14,10 @@ import ChLexer.Token
   * (wrapped subquery), `numbers(N)` (range), `LIMIT n BY k` (post-op),
   * trailing `FORMAT X` / `SETTINGS ...` / `INTO OUTFILE` / `\G`
   * (dropped). ClickHouse function NAMES need no rewriting — the whole
-  * dialect is registered natively on the session (ChRegistry).
+  * dialect is injected into every session by
+  * [[graft.plans.GraftExtensions]]. The outer-join default fill
+  * (`join_use_nulls = 0`) is not a text rewrite: the caller runs
+  * [[graft.plans.ChJoinDefaults]] over the analyzed plan.
   */
 object ChSqlRewrite {
 
@@ -58,8 +61,8 @@ object ChSqlRewrite {
     /** SQL literal text of `column`'s ClickHouse type default on the
       * (CH-named) table `ident` — powers reading right-side columns of
       * an ANTI JOIN (homeworks/hw06.md:137-149), where every surviving
-      * row is by definition unmatched, and the join_use_nulls = 0
-      * coalesce wrap on plain LEFT JOINs.
+      * row is by definition unmatched, and the miss fill of the ASOF
+      * LEFT lowering under join_use_nulls = 0.
       */
     def defaultLiteral(ident: String, column: String): Option[String] =
       None
@@ -76,15 +79,15 @@ object ChSqlRewrite {
 
     /** Column names of an arbitrary dialect SELECT (analysis only, no
       * execution) — powers the subquery sides of the ASOF SQL lowering
-      * and the join_use_nulls = 0 default synthesis, where no catalog
-      * entry exists to take a column list from.
+      * and of LEFT SEMI, where no catalog entry exists to take a column
+      * list from.
       */
     def describeQuery(sql: String): Option[Seq[String]] = None
 
     /** name → type-default literal map of an arbitrary dialect
-      * SELECT's output columns — what an unmatched outer-join side
-      * surfaces under `join_use_nulls = 0` when that side is a
-      * SUBQUERY. Best-effort declared-nullability passthrough: an
+      * SELECT's output columns — what an unmatched ANTI or ASOF LEFT
+      * right side surfaces under `join_use_nulls = 0` when that side is
+      * a SUBQUERY. Best-effort declared-nullability passthrough: an
       * output column naming exactly one declared catalog column takes
       * its declared default (runtime schemas widen everything to
       * nullable); computed columns keep the zero-value default of
@@ -103,8 +106,8 @@ object ChSqlRewrite {
 
     /** The session's `join_use_nulls` setting: false (ClickHouse's
       * default, 0) makes unmatched outer-join columns read their TYPE
-      * DEFAULTS via [[rewrite]]'s coalesce wrap; true (1) keeps SQL
-      * NULLs and disables the wrap.
+      * DEFAULTS ([[Rewritten.joinUseNulls]] tells the caller to run the
+      * plan fill); true (1) keeps SQL NULLs.
       */
     def joinUseNulls: Boolean = false
   }
@@ -119,10 +122,16 @@ object ChSqlRewrite {
   final case class FillOp(axis: String, from: Option[String],
                           to: Option[String], step: Option[String])
 
+  /** `joinUseNulls`: the statement's effective `join_use_nulls` (a
+    * `SETTINGS` tail over the session's) — false asks the caller to run
+    * the outer-join default fill ([[graft.plans.ChJoinDefaults]]) over
+    * the analyzed plan.
+    */
   final case class Rewritten(sql: String, limitBy: Option[LimitByOp],
                              finalLimit: Option[(Long, Long)],
                              fill: Option[FillOp] = None,
-                             outfile: Option[(String, Option[String])] = None)
+                             outfile: Option[(String, Option[String])] = None,
+                             joinUseNulls: Boolean = false)
 
   private val clauseStarters = Set("WHERE", "GROUP", "ORDER", "LIMIT",
     "HAVING", "SETTINGS", "UNION", "INTERSECT", "EXCEPT", "WINDOW",
@@ -204,9 +213,9 @@ object ChSqlRewrite {
     aliases.result()
   }
 
-  /** Select-block scoping shared by the three alias-sensitive rewrites
+  /** Select-block scoping shared by the alias-sensitive rewrites
     * (rewriteAnyJoin's composite requalification, rewriteAntiRightCols,
-    * rewriteLeftJoinDefaults): for every token, (a) the id of its
+    * the ASOF lowering, the star expansion): for every token, (a) the id of its
     * innermost enclosing SELECT block — a same-named alias inside an
     * unrelated subquery must not be rewritten by another block's join —
     * and (b) whether it sits in that block's SELECT list (between
@@ -270,21 +279,16 @@ object ChSqlRewrite {
     toks = rewriteArrayJoinClause(toks)
     toks = toks.map(t => if (t.is("arrayJoin")) Token("explode") else t)
     toks = rewriteDictGet(toks, resolver)
+    val useNulls = tailSettings.get("join_use_nulls").map(settingIsTrue)
+      .getOrElse(resolver.joinUseNulls)
     toks = normalizeBareUsing(toks, resolver)
     toks = rewriteSemiRightRefs(toks, resolver)
-    // BEFORE the two fill passes: a `d.*` over a join side becomes an
-    // explicit column list so the literal/coalesce substitutions can
-    // reach each reference (a star cannot be wrapped)
+    // BEFORE the ANTI fill: a `g.*` over an ANTI right side becomes an
+    // explicit column list the literal substitution can reach
     toks = expandQualifiedStars(toks, resolver)
-    toks = rewriteAntiRightCols(toks, resolver,
-      tailSettings.get("join_use_nulls").map(settingIsTrue))
-    // defaults BEFORE the ANY rewrite: LEFT ANY JOIN still has its
-    // plain-table right side here (the ANY rewrite wraps it in a dedup
-    // subquery, which the defaults scanner cannot take a catalog from)
-    toks = rewriteLeftJoinDefaults(toks, resolver,
-      tailSettings.get("join_use_nulls").map(settingIsTrue))
+    toks = rewriteAntiRightCols(toks, resolver, useNulls)
     toks = rewriteAnyJoin(toks)
-    toks = rewriteAsofJoin(toks, resolver)
+    toks = rewriteAsofJoin(toks, resolver, useNulls)
     toks = rewritePrewhere(toks)
     toks = rewriteWithTotals(toks)
     val (afterFill, fill) = extractWithFill(toks)
@@ -296,7 +300,8 @@ object ChSqlRewrite {
     toks = mapIdentifiers(toks, resolver)
     toks = expandColumnsMacro(toks, resolver)
     toks = toks.map(ChLexer.quoteDigitIdent)
-    Rewritten(ChLexer.render(toks), limitBy, finalLimit, fill, outfile)
+    Rewritten(ChLexer.render(toks), limitBy, finalLimit, fill, outfile,
+      useNulls)
   }
 
   /** `COLUMNS('regex')` → the matching column names of the statement's
@@ -1743,9 +1748,13 @@ object ChSqlRewrite {
     * the left — a composite join TREE, which flattens through an
     * auto-aliased `(SELECT * FROM tree) __asofl` subquery exactly like
     * the ANY RIGHT composite path (r11; pre-r11 both were refused).
+    * Under `join_use_nulls = 0` an ASOF LEFT miss reads the right
+    * side's type defaults, filled inside the lowering (it leaves no
+    * Join node for [[graft.plans.ChJoinDefaults]]).
     */
   private def rewriteAsofJoin(toks: Vector[Token],
-                              resolver: Resolver): Vector[Token] = {
+                              resolver: Resolver,
+                              useNulls: Boolean): Vector[Token] = {
     // first ASOF heading a join: `ASOF [LEFT] JOIN` (canonical CH
     // order) or the `LEFT ASOF JOIN` spelling
     var i = -1
@@ -1849,7 +1858,7 @@ object ChSqlRewrite {
         ChLexer.tokenize("(SELECT * FROM " + ChLexer.render(seg) +
           ") AS __asofl") ++
         requalC(toks.slice(head0, toks.length), head0)
-      return rewriteAsofJoin(rebuilt, resolver)
+      return rewriteAsofJoin(rebuilt, resolver, useNulls)
     }
     val (leftRef, leftInner, leftTail) =
       if (seg.head.text == "(") {
@@ -1885,6 +1894,18 @@ object ChSqlRewrite {
       }
     val leftCols = colsOfRef(leftRef, leftInner, fromIdx + 1)
     val rightCols = colsOfRef(rightRef, rightInner, t0)
+    // join_use_nulls = 0: an ASOF LEFT miss reads the right side's type
+    // defaults — the lowering leaves no Join node for ChJoinDefaults
+    val rightDefaults: Map[String, String] =
+      if (!isLeftJoin || useNulls) Map.empty
+      else (rightInner match {
+        case Some(sql) => resolver.queryDefaultLiterals(sql)
+        case None if cteShadowed(cteSc, stripTicks(rightRef), t0) =>
+          cteProbe(toks, stripTicks(rightRef))
+            .flatMap(resolver.queryDefaultLiterals)
+        case None => Some(rightCols.flatMap(c =>
+          resolver.defaultLiteral(rightRef, c).map(c -> _)).toMap)
+      }).getOrElse(Map.empty)
     // ---- condition: equi keys + the one time inequality
     var keys = Vector.empty[(String, String)] // (left col, right col)
     var timePair: Option[(String, String, String)] = None // lcol, rcol, op
@@ -2030,8 +2051,11 @@ object ChSqlRewrite {
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __m"
     val collide = leftCols.toSet
     def outName(c: String): String = if (collide(c)) s"__r_$c" else c
-    val finalSel = leftCols.map(c => q(c)) ++
-      rightCols.map(c => s"__m.${q(c)} AS ${q(outName(c))}")
+    val finalSel = leftCols.map(c => q(c)) ++ rightCols.map { c =>
+      val v = rightDefaults.get(c).fold(s"__m.${q(c)}")(d =>
+        s"coalesce(__m.${q(c)}, $d)")
+      s"$v AS ${q(outName(c))}"
+    }
     val innerFilter = if (isLeftJoin) "" else " AND __m IS NOT NULL"
     val gen = s"(SELECT ${finalSel.mkString(", ")} FROM (SELECT *, $win " +
       s"FROM ($lBranch UNION ALL $rBranch)) WHERE __side = 1$innerFilter)"
@@ -2072,7 +2096,7 @@ object ChSqlRewrite {
     val rebuilt = requal(toks.take(fromIdx + 1), 0) ++
       ChLexer.tokenize(gen) ++ Vector(Token("AS"), Token("__asof")) ++
       requal(toks.slice(e, toks.length), e)
-    rewriteAsofJoin(rebuilt, resolver)
+    rewriteAsofJoin(rebuilt, resolver, useNulls)
   }
 
   /** ClickHouse lets a query READ right-side columns of an ANTI JOIN:
@@ -2096,8 +2120,7 @@ object ChSqlRewrite {
     */
   private def rewriteAntiRightCols(toks: Vector[Token],
                                    resolver: Resolver,
-                                   queryUseNulls: Option[Boolean]): Vector[Token] = {
-    val useNulls = queryUseNulls.getOrElse(resolver.joinUseNulls)
+                                   useNulls: Boolean): Vector[Token] = {
     val cteSc = cteScopes(toks)
     // collect every ANTI join: (alias, right side — a catalog table or
     // a subquery's inner text (r11) — and the segment span
@@ -2242,12 +2265,9 @@ object ChSqlRewrite {
     out.result()
   }
 
-  // ---- join_use_nulls = 0: outer-join columns default on miss ----
   /** SQL word-forms that pass [[Token.isIdent]] but can never be a bare
-    * column reference — the unqualified-reference resolution of
-    * [[rewriteLeftJoinDefaults]] must not treat them as candidate
-    * columns (a backtick-quoted spelling IS a real identifier and is
-    * exempted at the check site).
+    * column reference or alias (a backtick-quoted spelling IS a real
+    * identifier and is exempted at the check site).
     */
   private val sqlWordLike = Set("AS", "AND", "OR", "NOT", "SELECT", "BY",
     "DISTINCT", "CASE", "WHEN", "THEN", "ELSE", "END", "IN", "IS", "NULL",
@@ -2468,26 +2488,27 @@ object ChSqlRewrite {
   /** Expands a SELECT-list qualified star `a.*` (optionally with an
     * `EXCEPT (cols)` tail) into the explicit `a.c1, a.c2, …` column
     * list of the plain CATALOG TABLE that `a` names or aliases in the
-    * same block's FROM region. Runs only when the statement has an
-    * outer/semi/anti/asof join at all: the expansion is semantically
-    * the projection Spark would produce anyway, but it lets the
-    * join_use_nulls = 0 coalesce wrap and the ANTI right-column
-    * substitution reach each reference individually — a star token is
-    * unwrappable, so pre-expansion a `SELECT d.*` over a defaultable
-    * side kept Spark's NULLs (and over an ANTI right side did not
-    * resolve at all). Subquery/CTE aliases are left alone (their
-    * defaults flow through the schema-derived passthrough instead),
-    * as are MergeTree virtual columns (ClickHouse hides them from
-    * stars).
+    * same block's FROM region. Runs only in blocks with an ANTI or
+    * ASOF join: the expansion is semantically the projection Spark
+    * would produce anyway, but it lets the ANTI right-column
+    * substitution reach each reference individually (pre-expansion a
+    * `SELECT g.*` over an ANTI right side did not resolve at all), and
+    * the ASOF lowering requalify each side's columns one by one (a
+    * star over its flattened `__asof` subquery would read both sides).
+    * A bare `*` expands only in ANTI blocks. Subquery/CTE aliases are
+    * left alone, as are MergeTree virtual columns (ClickHouse hides
+    * them from stars).
     */
   private def expandQualifiedStars(toks: Vector[Token],
                                    resolver: Resolver): Vector[Token] = {
     if (!toks.exists(t => !t.isString &&
       (t.text == "*" || (t.isIdent && t.text.endsWith(".*"))))) return toks
-    if (!toks.exists(t => !t.isString && (t.is("LEFT") || t.is("RIGHT") ||
-      t.is("FULL") || t.is("ANTI") || t.is("SEMI") || t.is("ASOF"))))
+    if (!toks.exists(t => !t.isString && (t.is("ANTI") || t.is("ASOF"))))
       return toks
     val (blockOf, inList) = selectBlockScopes(toks)
+    val starBlocks = toks.indices.collect {
+      case i if toks(i).is("ANTI") || toks(i).is("ASOF") => blockOf(i)
+    }.toSet
     val cte = cteScopes(toks)
     // (block, qualifier) → catalog table, from `FROM/JOIN table
     // [[AS] alias]` shapes; an ALIASED table is addressable only by
@@ -2519,19 +2540,19 @@ object ChSqlRewrite {
     // per-block ORDERED component inventory for BARE-star expansion:
     // Some(aliases in FROM order) only when every component is a plain
     // resolvable catalog table, all joins use ON (USING merges key
-    // columns — different star shape), and the block has a
-    // LEFT/RIGHT/FULL/ANTI join (the ones whose fills need explicit
-    // refs). SEMI (ClickHouse shows right columns, Spark cannot) and
-    // ASOF (its lowering reshapes the FROM) blocks skip, conservative.
+    // columns — different star shape), and the block has an ANTI join
+    // (whose right-side fill needs explicit refs). SEMI (ClickHouse
+    // shows right columns, Spark cannot) and ASOF (its lowering
+    // reshapes the FROM) blocks skip, conservative.
     val blockComps = scala.collection.mutable
       .Map.empty[Int, Option[Vector[(String, String)]]]
     def walkBlock(fromIdx: Int): Option[Vector[(String, String)]] = {
       val b = blockOf(fromIdx)
       val comps = Vector.newBuilder[(String, String)]
       var p = fromIdx + 1
-      var defaultable = false
+      var anti = false
       def finish(): Option[Vector[(String, String)]] =
-        if (defaultable) Some(comps.result()) else None
+        if (anti) Some(comps.result()) else None
       while (p < toks.length && blockOf(p) == b) {
         // component
         if (toks(p).text == "(") return None // subquery side
@@ -2580,16 +2601,16 @@ object ChSqlRewrite {
             if (tj.is("JOIN")) { sawJoin = true; p += 1 }
             else if (tj.is("SEMI") || tj.is("ASOF") || tj.is("PASTE") ||
               tj.is("ARRAY") || tj.is("LATERAL")) bad = true
+            else if (tj.is("ANTI")) { anti = true; p += 1 }
             else if (tj.is("LEFT") || tj.is("RIGHT") || tj.is("FULL") ||
-              tj.is("ANTI")) { defaultable = true; p += 1 }
-            else if (tj.is("INNER") || tj.is("CROSS") || tj.is("ANY") ||
+              tj.is("INNER") || tj.is("CROSS") || tj.is("ANY") ||
               tj.is("ALL") || tj.is("OUTER") || tj.is("GLOBAL")) p += 1
             else bad = true
           }
           if (bad || !sawJoin) return None
         }
       }
-      if (defaultable) Some(comps.result()) else None
+      finish()
     }
     locally {
       var k = 0
@@ -2631,7 +2652,8 @@ object ChSqlRewrite {
       val topLevel = inList(p) &&
         selDepth.get(blockOf(p)).contains(depthAt(p))
       val expandable = t.isIdent && !t.isString &&
-        t.text.endsWith(".*") && t.text.length > 2 && topLevel
+        t.text.endsWith(".*") && t.text.length > 2 && topLevel &&
+        starBlocks(blockOf(p))
       val hit: Option[Seq[(String, String)]] = if (expandable) {
         val qual = stripTicks(t.text.dropRight(2)).toLowerCase
         comp.get((blockOf(p), qual))
@@ -2639,8 +2661,8 @@ object ChSqlRewrite {
           .map(cols => cols.map(c => (qual, c)))
       } else if (t.text == "*" && !t.isString && topLevel &&
         // a bare star expands only in the inventoried blocks (every
-        // component a plain catalog table, ON joins, LEFT/RIGHT/FULL/
-        // ANTI present) — the per-component lists concatenate in FROM
+        // component a plain catalog table, ON joins, an ANTI join
+        // present) — the per-component lists concatenate in FROM
         // order, which is both Spark's and ClickHouse's star shape
         blockComps.get(blockOf(p)).exists(_.isDefined)) {
         val comps = blockComps(blockOf(p)).get
@@ -2680,399 +2702,6 @@ object ChSqlRewrite {
       }
     }
     if (changed) out.result() else toks
-  }
-
-  /** ClickHouse's DEFAULT outer-join behavior (`join_use_nulls = 0`,
-    * lectures/lecture_10.md): unmatched-side columns of a
-    * LEFT / RIGHT / FULL [OUTER|ANY] JOIN — and of ASOF LEFT JOIN,
-    * whose strictness changes WHICH rows match, not how misses fill —
-    * read their TYPE DEFAULTS, not SQL NULLs. Spark's outer joins yield
-    * NULLs, so every reference to a defaultable side that is evaluated
-    * AFTER the join (the block's SELECT list, WHERE/HAVING/ORDER, later
-    * joins' conditions) is wrapped in `coalesce(ref, <declared
-    * default>)`: matched rows keep their real values, unmatched rows
-    * read the default, and a Nullable(T) column — whose ClickHouse
-    * default IS NULL — resolves to `coalesce(ref, CAST(NULL AS T))` ≡
-    * ref, so it keeps NULL exactly as ClickHouse does.
-    *
-    * Defaultable sides: the right side of LEFT [ANY|ASOF] / FULL JOIN
-    * (this pass runs BEFORE rewriteAnyJoin and the ASOF lowering,
-    * while that side is still its original ref), and every component
-    * of the left join tree of RIGHT / FULL JOIN (single-table or
-    * composite). A side may be a plain catalog table (declared
-    * defaults) or — r11 — an aliased SUBQUERY, whose defaults
-    * synthesize from its resolved output schema exactly as ClickHouse
-    * takes them from the subquery's result types
-    * ([[Resolver.queryDefaultLiterals]]; pre-r11 subquery sides kept
-    * NULLs, the one semantic delta inside this feature). References
-    * are matched alias-qualified (`g.genre`, backticks allowed) or
-    * UNQUALIFIED — an unqualified reference wraps only when the
-    * resolver proves it belongs to the defaultable side and to NO
-    * other component of the same FROM (ambiguous names,
-    * unknown-schema components and SELECT-alias shadowing all skip
-    * the wrap). SEMI/ANTI keep their own semantics. A session
-    * `SET join_use_nulls = 1`
-    * ([[Resolver.joinUseNulls]]) or a per-query `SETTINGS
-    * join_use_nulls = 1` tail disables the wrap. Found by the r9
-    * dictGet metamorphic law (dictGetOrDefault vs LEFT JOIN disagreed
-    * on missing keys).
-    */
-  private def rewriteLeftJoinDefaults(toks: Vector[Token],
-                                      resolver: Resolver,
-                                      queryUseNulls: Option[Boolean])
-      : Vector[Token] = {
-    if (queryUseNulls.getOrElse(resolver.joinUseNulls)) return toks
-    // blockFrom: the clause's own FROM token. The wrap region is the
-    // block's SELECT list (textually BEFORE the FROM, evaluated after
-    // the join) plus everything from the join condition's end on; the
-    // FROM region before the condition end (table refs, aliases,
-    // earlier joins' own conditions) is evaluated before this join
-    // fills anything and must stay unwrapped.
-    // one FROM component: a plain catalog table (table = Some) or an
-    // aliased subquery (subSql = its inner SELECT text; r11 — pre-r11
-    // subquery sides had no catalog defaults and kept NULLs, now their
-    // defaults synthesize from the resolved output schema via
-    // [[Resolver.queryDefaultLiterals]])
-    final case class Comp(alias: String, table: Option[String],
-                          subSql: Option[String])
-    final case class Seg(alias: String, src: Comp, blockFrom: Int,
-                         until: Int, anchor: Int)
-    val term = joinCondTerm
-    // CTE-bound names are SUBQUERY components (r12): probed through the
-    // statement's WITH prefix; a probe miss (nested WITH) leaves the
-    // component unknown-schema, which blocks ownership claims and drops
-    // the seg — conservative, never the same-named catalog table.
-    // Scope-aware (the cteShadowed rule): a reference inside the CTE's
-    // OWN body reads the catalog table, so a self-referencing body
-    // cannot probe itself
-    val cteSc = cteScopes(toks)
-    def compOf(alias: String, table: String, pos: Int): Comp =
-      if (cteShadowed(cteSc, stripTicks(table), pos))
-        Comp(alias, None, cteProbe(toks, stripTicks(table)))
-      else Comp(alias, Some(table), None)
-    // alias of a `table [AS] [alias] [FINAL|SAMPLE …]` region — the
-    // modifier tokens never name the table (same split rewriteAnyJoin
-    // uses; pre-fix a trailing FINAL was mistaken for the alias)
-    def aliasOf(region: Vector[Token], table: String): String = {
-      val modAt = region.indexWhere(t => t.is("FINAL") || t.is("SAMPLE"))
-      val aToks = if (modAt < 0) region else region.take(modAt)
-      aToks.filterNot(_.is("AS")).lastOption.map(_.text)
-        .getOrElse(table.split('.').last)
-    }
-    // end of the join's ON/USING condition, scanning from k (the
-    // ON/USING keyword)
-    def condEnd(k: Int): Int = {
-      var e = k + 1
-      var dd = 0
-      var stop = false
-      while (e < toks.length && !stop) {
-        val te = toks(e)
-        if (te.text == "(") dd += 1
-        else if (te.text == ")") { dd -= 1; if (dd < 0) stop = true }
-        else if (dd == 0 && kwAt(toks, e, term)) stop = true
-        if (!stop) e += 1
-      }
-      e
-    }
-    // the clause's own FROM, scanning backward at paren depth 0 (the
-    // rewriteAnyJoin leftSide discipline)
-    def fromOf(i: Int): Int = {
-      var fromIdx = -1
-      var depth = 0
-      var p = i - 1
-      while (fromIdx < 0 && p >= 0) {
-        val tx = toks(p).text
-        if (tx == ")") depth += 1
-        else if (tx == "(") { depth -= 1; if (depth < 0) p = 0 }
-        else if (depth == 0 && toks(p).is("FROM")) fromIdx = p
-        p -= 1
-      }
-      fromIdx
-    }
-    // forward parse of the FROM region after `fromIdx` into
-    // components. `complete = false` flags an unhandled shape
-    // (LATERAL VIEW, malformation) — callers then skip, conservative.
-    def components(fromIdx: Int, stop: Int)
-        : (Vector[Comp], Boolean) = {
-      val out = Vector.newBuilder[Comp]
-      var p = fromIdx + 1
-      var complete = true
-      var done = false
-      while (!done && p < stop) {
-        var subSql: Option[String] = None
-        var identPos = -1
-        val tableOpt: Option[String] =
-          if (toks(p).text == "(") {
-            val close = matchParen(toks, p)
-            if (close < 0 || close >= stop) { complete = false; done = true }
-            else {
-              subSql = Some(ChLexer.render(toks.slice(p + 1, close)))
-              p = close + 1
-            }
-            None
-          } else if (toks(p).isIdent && !toks(p).isString &&
-            !term(toks(p).upper)) {
-            val t0 = toks(p).text; identPos = p; p += 1; Some(t0)
-          } else { complete = false; done = true; None }
-        if (!done) {
-          // alias/modifier region: anything up to ON/USING, a join or
-          // clause keyword, or a structural token
-          val region = Vector.newBuilder[Token]
-          var stopRegion = false
-          while (!stopRegion && p < stop) {
-            val t = toks(p)
-            if (t.text == "(" || t.text == ")" || t.text == "," ||
-              t.is("ON") || t.is("USING") ||
-              (!t.isString && term(t.upper))) stopRegion = true
-            else { region += t; p += 1 }
-          }
-          out += (tableOpt match {
-            case Some(t0) => compOf(aliasOf(region.result(), t0), t0, identPos)
-            case None =>
-              Comp(aliasOf(region.result(), ""), None, subSql)
-          })
-          if (p < stop && (toks(p).is("ON") || toks(p).is("USING")))
-            p = math.min(condEnd(p), stop)
-          // join-keyword run before the next component; a clause
-          // starter / block end terminates the walk
-          var sawJoin = false
-          var stopJoin = false
-          while (!stopJoin && p < stop) {
-            val t = toks(p)
-            if (t.is("JOIN")) { sawJoin = true; p += 1 }
-            else if (t.is("LEFT") || t.is("RIGHT") || t.is("INNER") ||
-              t.is("FULL") || t.is("CROSS") || t.is("ANY") ||
-              t.is("ALL") || t.is("ASOF") || t.is("SEMI") ||
-              t.is("ANTI") || t.is("OUTER") || t.is("GLOBAL") ||
-              t.is("PASTE")) p += 1
-            else stopJoin = true
-          }
-          if (p >= stop) done = true
-          else if (!sawJoin) {
-            if (toks(p).text == ")" ||
-              (!toks(p).isString && clauseStarters(toks(p).upper)) ||
-              toks(p).text == ";") done = true
-            else { complete = false; done = true }
-          }
-        }
-      }
-      (out.result(), complete)
-    }
-    val segs = Vector.newBuilder[Seg]
-    var i = 0
-    while (i < toks.length) {
-      val isLeft = toks(i).is("LEFT")
-      val isRight = toks(i).is("RIGHT")
-      val isFull = toks(i).is("FULL")
-      if (isLeft || isRight || isFull) {
-        // ASOF LEFT keeps the left-outer fill contract (ClickHouse
-        // applies join_use_nulls to ASOF misses like any LEFT JOIN);
-        // SEMI/ANTI are refused by the j-scan requiring JOIN next
-        val asofHead = i > 0 && toks(i - 1).is("ASOF")
-        val asofTail = i + 1 < toks.length && toks(i + 1).is("ASOF")
-        if ((!asofHead && !asofTail) || isLeft) {
-          var j = i + 1
-          while (j < toks.length &&
-            (toks(j).is("OUTER") || toks(j).is("ANY") ||
-              toks(j).is("ASOF"))) j += 1
-          if (j < toks.length && toks(j).is("JOIN")) {
-            // find the condition start for the span
-            var k = j + 1
-            while (k < toks.length && !toks(k).is("USING") && !toks(k).is("ON"))
-              k += 1
-            if (k < toks.length) {
-              val e = condEnd(k)
-              // an ANY/ASOF-first spelling (`ANY RIGHT JOIN`,
-              // `ASOF LEFT JOIN`) puts that token between the left
-              // ref and i — scan back from it
-              val i0 = if (i > 0 && (toks(i - 1).is("ANY") || asofHead))
-                i - 1 else i
-              val fromIdx = fromOf(i0)
-              if (fromIdx >= 0) {
-                // right side defaults for LEFT/FULL — a plain table
-                // (catalog defaults) or an aliased subquery (defaults
-                // synthesized from its output schema, r11)
-                if (isLeft || isFull) {
-                  if (toks(j + 1).text != "(") {
-                    val table = toks(j + 1).text
-                    val region = toks.slice(j + 2, k)
-                    val c = compOf(aliasOf(region, table), table, j + 1)
-                    if (c.table.nonEmpty || c.subSql.nonEmpty)
-                      segs += Seg(c.alias, c, fromIdx, e, i)
-                  } else {
-                    val close = matchParen(toks, j + 1)
-                    if (close > 0 && close < k) {
-                      val inner = ChLexer.render(toks.slice(j + 2, close))
-                      val alias = aliasOf(toks.slice(close + 1, k), "")
-                      // an unaliased subquery side has no referenceable
-                      // qualifier — nothing to wrap
-                      if (alias.nonEmpty)
-                        segs += Seg(alias, Comp(alias, None, Some(inner)),
-                          fromIdx, e, i)
-                    }
-                  }
-                }
-                // left side defaults for RIGHT/FULL: EVERY component of
-                // the left join tree defaults on a miss (single-table
-                // and composite; subquery components via their output
-                // schemas, r11)
-                if (isRight || isFull) {
-                  val (comps, complete) = components(fromIdx, i0)
-                  if (complete) comps.foreach { c =>
-                    if (c.alias.nonEmpty &&
-                      (c.table.nonEmpty || c.subSql.nonEmpty))
-                      segs += Seg(c.alias, c, fromIdx, e, i)
-                  }
-                }
-              }
-            }
-          }
-        }
-      }
-      i += 1
-    }
-    val sgs = segs.result()
-    if (sgs.isEmpty) return toks
-    def stripQual(alias: String, text: String): Option[String] =
-      if (text.endsWith(".*")) None // a qualified star is not a column ref
-      else if (text.startsWith(alias + ".")) Some(text.stripPrefix(alias + "."))
-      else if (text.startsWith("`" + alias + "`."))
-        Some(text.stripPrefix("`" + alias + "`."))
-      else None
-    // same select-block scoping as rewriteAntiRightCols: a same-named
-    // alias inside an unrelated subquery must not be wrapped
-    val (blockOf, inList) = selectBlockScopes(toks)
-    // full FROM-region inventory of each seg's block (both join sides),
-    // for unqualified-reference ownership checks
-    val blockInfo = scala.collection.mutable.Map
-      .empty[Int, (Vector[Comp], Boolean)]
-    sgs.foreach { s =>
-      val b = blockOf(s.anchor)
-      if (!blockInfo.contains(b))
-        blockInfo(b) = components(s.blockFrom, toks.length)
-    }
-    // end of each block's whole FROM region (first clause keyword at
-    // depth 0 after the FROM): unqualified wrapping must skip ALL of
-    // it — a later join's table/alias tokens are bare idents too, and
-    // wrapping an alias definition would corrupt the SQL
-    val fromEnd = scala.collection.mutable.Map.empty[Int, Int]
-    sgs.foreach { s =>
-      val b = blockOf(s.anchor)
-      if (!fromEnd.contains(b)) {
-        var q = s.blockFrom + 1
-        var dd = 0
-        var stop = false
-        while (q < toks.length && !stop) {
-          val t = toks(q)
-          if (t.text == "(") dd += 1
-          else if (t.text == ")") { dd -= 1; if (dd < 0) stop = true }
-          else if (dd == 0 && !t.isString &&
-            (clauseStarters(t.upper) || t.text == ";")) stop = true
-          if (!stop) q += 1
-        }
-        fromEnd(b) = q
-      }
-    }
-    // column inventory per referenced table / subquery, through the
-    // resolver (a subquery's analysis round-trip is cached per text
-    // and only paid when a reference actually probes it)
-    val colCache = scala.collection.mutable.Map.empty[String, Option[Set[String]]]
-    def colsOf(table: String): Option[Set[String]] =
-      colCache.getOrElseUpdate(table,
-        resolver.resolve(table).flatMap(rt => resolver.describe(rt.viewName))
-          .map(_.map(_.toLowerCase).toSet))
-    val subDefCache = scala.collection.mutable.Map
-      .empty[String, Option[Map[String, String]]]
-    def subDefaults(sql: String): Option[Map[String, String]] =
-      subDefCache.getOrElseUpdate(sql, resolver.queryDefaultLiterals(sql))
-    def colsOfComp(c: Comp): Option[Set[String]] = c.table match {
-      case Some(t) => colsOf(t)
-      case None => c.subSql.flatMap(sql =>
-        subDefaults(sql).map(_.keySet.map(_.toLowerCase)))
-    }
-    def defaultOf(s: Seg, col: String): Option[String] = s.src.table match {
-      case Some(t) => resolver.defaultLiteral(t, col)
-      case None => s.src.subSql.flatMap(sql => subDefaults(sql).flatMap(
-        _.collectFirst { case (n, v) if n.equalsIgnoreCase(col) => v }))
-    }
-    // names bound by `AS <alias>` anywhere in a block: a SELECT-list
-    // alias shadows a same-named column in ORDER BY/HAVING, so an
-    // unqualified match on one must not be wrapped (conservative:
-    // collected from the whole block, over-collection only skips wraps)
-    val asAliases = scala.collection.mutable.Map
-      .empty[Int, scala.collection.mutable.Set[String]]
-    locally {
-      var q = 0
-      while (q < toks.length - 1) {
-        if (toks(q).is("AS") && toks(q + 1).isIdent)
-          asAliases.getOrElseUpdate(blockOf(q + 1),
-            scala.collection.mutable.Set.empty) +=
-            stripTicks(toks(q + 1).text).toLowerCase
-        q += 1
-      }
-    }
-    def inWrapRegion(s: Seg, p: Int): Boolean =
-      blockOf(p) == blockOf(s.anchor) &&
-        (p < s.blockFrom || p >= s.until)
-    // an UNQUALIFIED reference resolves to seg `s`'s table only when
-    // ownership is provable: the name is a column of s.table and of NO
-    // other FROM component (unknown-schema components block the claim)
-    def unqualCol(s: Seg, p: Int): Option[String] = {
-      val t = toks(p)
-      val name = stripTicks(t.text)
-      if (name.contains(".")) return None
-      if (p >= s.blockFrom && p < fromEnd(blockOf(s.anchor))) return None
-      if (!t.text.startsWith("`") &&
-        (term(t.upper) || sqlWordLike(t.upper))) return None
-      if (p + 1 < toks.length && toks(p + 1).text == "(") return None
-      if (asAliases.get(blockOf(p)).exists(_.contains(name.toLowerCase)))
-        return None
-      val (comps, complete) = blockInfo(blockOf(s.anchor))
-      if (!complete) return None
-      if (!colsOfComp(s.src).exists(_.contains(name.toLowerCase)))
-        return None
-      val owned = comps.filterNot(_.alias == s.alias).forall(c =>
-        colsOfComp(c).exists(cs => !cs.contains(name.toLowerCase)))
-      if (owned) Some(name) else None
-    }
-    val out = Vector.newBuilder[Token]
-    var p = 0
-    while (p < toks.length) {
-      val t = toks(p)
-      val hit: Option[(String, String)] =
-        if (!t.isIdent || t.isString) None
-        else {
-          val qual = sgs.iterator
-            .filter(s => inWrapRegion(s, p))
-            .flatMap(s => stripQual(s.alias, t.text).flatMap(c =>
-              defaultOf(s, stripTicks(c)).map(l =>
-                (l, t.text.substring(t.text.indexOf('.') + 1)))))
-            .nextOption()
-          qual.orElse {
-            sgs.iterator
-              .filter(s => inWrapRegion(s, p))
-              .flatMap(s => unqualCol(s, p).flatMap(c =>
-                defaultOf(s, c).map(l => (l, t.text))))
-              .nextOption()
-          }
-        }
-      hit match {
-        case Some((lit0, colName)) =>
-          // bare SELECT-list item (SELECT …, g.genre, … FROM): keep the
-          // column's name on the wrapped expression
-          val bare = inList(p) && p > 0 && p + 1 < toks.length &&
-            (toks(p - 1).text == "," || toks(p - 1).is("SELECT") ||
-              toks(p - 1).is("DISTINCT")) &&
-            (toks(p + 1).text == "," || toks(p + 1).is("FROM"))
-          out += Token("coalesce") += Token("(") += t += Token(",")
-          out ++= ChLexer.tokenize(lit0)
-          out += Token(")")
-          if (bare) { out += Token("AS") += Token(colName); () }
-        case None => out += t
-      }
-      p += 1
-    }
-    out.result()
   }
 
   // ---- PREWHERE p [WHERE w] → WHERE (p) AND (w) ----
@@ -3354,7 +2983,7 @@ object ChSqlRewrite {
     * name). None when the name is not bound there (e.g. a WITH nested
     * inside a subquery) — callers then treat the side as unknown-schema
     * and skip conservatively, NEVER as the same-named catalog table.
-    * Powers the join_use_nulls default fill for CTE join sides: a CTE
+    * Powers the ANTI and ASOF LEFT fills for CTE join sides: a CTE
     * is a subquery, so misses fill its RESULT-type defaults — and
     * because the probe's outer select list IS the CTE's own, the
     * [[Resolver.queryDefaultLiterals]] plain-reference passthrough

@@ -1,5 +1,8 @@
 package graft.chsql
 
+import org.apache.spark.sql.{Column, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 /** ClickHouse type-name → Spark `DataType` mapping for the SQL dialect
@@ -114,32 +117,49 @@ object ChTypes {
     }
   }
 
-  /** SQL literal text of the ClickHouse type DEFAULT for a column of
-    * Spark type `dt` — what an unmatched outer-join side surfaces under
-    * `join_use_nulls = 0`, and what right-side columns of an ANTI JOIN
-    * read as (homeworks/hw06.md:137-149: `g.genre` renders '').
-    * `nullable` is the COLUMN's nullability: Nullable(T)'s ClickHouse
-    * default is NULL, not T's zero value.
+  /** The ClickHouse type DEFAULT of a column of Spark type `dt` — what
+    * an unmatched outer-join side reads under `join_use_nulls = 0`
+    * ([[graft.plans.ChJoinDefaults]]), what right-side columns of an
+    * ANTI JOIN read as (homeworks/hw06.md:137-149: `g.genre` renders
+    * ''), and what an INSERT fills into an omitted column. `nullable`
+    * is the COLUMN's declared nullability: Nullable(T)'s ClickHouse
+    * default is NULL, not T's zero value. A Tuple defaults per element;
+    * types with no ClickHouse zero (binary sketches) default to NULL.
     */
-  def defaultLiteralSql(dt: DataType, nullable: Boolean = false): String =
-    if (nullable) s"CAST(NULL AS ${dt.sql})"
+  def defaultValue(dt: DataType, nullable: Boolean = false): Literal =
+    if (nullable) Literal(null, dt)
     else dt match {
-      case StringType     => "''"
-      case BooleanType    => "false"
-      case DateType       => "DATE '1970-01-01'"
-      case TimestampType  => "TIMESTAMP '1970-01-01 00:00:00'"
-      case n: NumericType => s"CAST(0 AS ${n.sql})"
-      case a: ArrayType   => s"CAST(array() AS ${a.sql})"
-      case m: MapType     => s"CAST(map() AS ${m.sql})" // CH default: {}
-      case s: StructType  => // CH Tuple default: per-element defaults
-        val items = s.fields // field names become SQL string literals —
-          // escape embedded single quotes ('' form) or the emitted SQL breaks
-          .map(f => s"'${f.name.replace("'", "''")}', " +
-            defaultLiteralSql(f.dataType, f.nullable))
-          .mkString(", ")
-        s"CAST(named_struct($items) AS ${s.sql})"
-      case other          => s"CAST(NULL AS ${other.sql})"
+      case s: StructType => Literal(InternalRow.fromSeq(s.fields.toSeq.map(f =>
+        defaultValue(f.dataType, f.nullable).value)), s)
+      case _: StringType | BooleanType | DateType | TimestampType |
+           _: NumericType | _: ArrayType | _: MapType => Literal.default(dt)
+      case other => Literal(null, other)
     }
+
+  /** [[defaultValue]] as a DataFrame column, of exactly type `dt` (an
+    * INSERT's omitted columns).
+    */
+  def defaultColumn(dt: DataType, nullable: Boolean = false): Column =
+    GraftSqlBridge.column(defaultValue(dt, nullable))
+
+  /** [[defaultValue]] as SQL text of type `dt` (the dialect rewriter
+    * splices it into statements). A Tuple renders element-wise: field
+    * names become SQL string literals with embedded quotes escaped.
+    */
+  def defaultLiteralSql(dt: DataType, nullable: Boolean = false): String = {
+    val v = defaultValue(dt, nullable)
+    dt match {
+      case _ if v.value == null => s"CAST(NULL AS ${dt.sql})"
+      case s: StructType =>
+        s.fields.map(f => s"'${f.name.replace("'", "''")}', " +
+          defaultLiteralSql(f.dataType, f.nullable))
+          .mkString("CAST(named_struct(", ", ", s") AS ${s.sql})")
+      // plain digits: the rewriter's lexer would read Spark's typed
+      // literal suffixes (0L, 0S, 0BD) as identifiers
+      case _: NumericType => s"CAST(${v.value} AS ${dt.sql})"
+      case _ => s"CAST(${v.sql} AS ${dt.sql})"
+    }
+  }
 
   /** Splits "a, b(c, d), e" on top-level commas only. Both quote kinds
     * protect their content: single-quoted SQL literals ('' escape) and

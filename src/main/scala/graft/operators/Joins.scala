@@ -79,26 +79,13 @@ object Joins {
 
   /** `join_use_nulls = 0` — ClickHouse's DEFAULT outer-join behavior:
     * unmatched side columns surface as TYPE DEFAULTS (0, '', false, epoch)
-    * instead of SQL NULLs (lectures/lecture_10.md). Round 1 shipped only
-    * the `=1` (null-producing) semantics; this closes the delta. Pure
-    * column work after the join — no extra shuffle.
+    * instead of SQL NULLs (lectures/lecture_10.md). The same plan fill
+    * the dialect runs ([[graft.plans.ChJoinDefaults]]) over a plain left
+    * join — pure column work after the join, no extra shuffle.
     */
   def leftJoinDefaults(left: DataFrame, right: DataFrame,
-                       keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types._
-    def defaultFor(dt: DataType): Column = dt match {
-      case StringType     => lit("")
-      case BooleanType    => lit(false)
-      case DateType       => lit(java.sql.Date.valueOf("1970-01-01"))
-      case TimestampType  => lit(java.sql.Timestamp.valueOf("1970-01-01 00:00:00"))
-      case n: NumericType => lit(0).cast(n)
-      case other          => lit(null).cast(other) // no defined CH default
-    }
-    val joined = left.join(right, keys, "left")
-    right.columns.filterNot(keys.contains).foldLeft(joined) { (acc, c) =>
-      acc.withColumn(c, coalesce(col(c), defaultFor(right.schema(c).dataType)))
-    }
-  }
+                       keys: Seq[String]): DataFrame =
+    graft.plans.ChJoinDefaults(left.join(right, keys, "left"))
 
   /** ASOF LEFT JOIN through the native operator
     * ([[graft.plans.AsOfJoinPlan]] → [[graft.plans.AsOfJoinExec]], planned

@@ -50,8 +50,13 @@ object ProjectionRouting {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
       fs.location.rootPaths.headOption
         .flatMap(rp => registered.get(normalize(rp.toString)))
-    // see through the column-pruning Project the optimizer inserts
-    case Project(projList, child) if projList.forall(_.isInstanceOf[AttributeReference]) =>
+    // see through the column-pruning Project the optimizer inserts, and
+    // the same-name relabel that marks declared-Nullable columns
+    case Project(projList, child) if projList.forall {
+          case _: AttributeReference => true
+          case Alias(a: AttributeReference, n) => n == a.name
+          case _ => false
+        } =>
       forPlan(child)
     case _ => None
   }

@@ -1566,6 +1566,22 @@ class ChSqlSpec extends SparkSpec {
       == Seq((1L, 30L), (2L, 30L)))
   }
 
+  test("an aggregate over a Nullable column still routes to its projection") {
+    val dir = java.nio.file.Files.createTempDirectory("chs_nullproj").toString
+    val s = new ChSession(spark, Some(dir))
+    graft.plans.ProjectionRouting.clear()
+    s.execute(
+      """CREATE TABLE npj (k UInt32, v Nullable(UInt32)) ENGINE = MergeTree
+        |  ORDER BY k;
+        |INSERT INTO npj VALUES (1, 10), (1, 20), (2, 30), (2, NULL);
+        |ALTER TABLE npj ADD PROJECTION pj (SELECT k, sum(v) GROUP BY k);
+        |ALTER TABLE npj MATERIALIZE PROJECTION pj""".stripMargin)
+    val routed = s.sql("SELECT k, sum(v) AS sv FROM npj GROUP BY k ORDER BY k")
+    assert(routed.queryExecution.executedPlan.toString.contains("__proj_"))
+    assert(routed.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      == Seq((1L, 30L), (2L, 30L)))
+  }
+
   test("EXPLAIN tolerates CH kinds and options (indexes = 1, SYNTAX)") {
     val s = ch
     s.execute(
@@ -2088,6 +2104,21 @@ class ChSqlSpec extends SparkSpec {
         |ON m.id = gj.movie_id ORDER BY m.id""".stripMargin).collect()
     assert(fin(1).getString(1) == "",
       "FINAL after the table must not eat the alias derivation")
+    // a CREATE VIEW side keeps its columns' declared nullability: a
+    // Nullable(Int32) miss reads NULL, a String miss ''
+    s.execute("CREATE VIEW gjv AS SELECT movie_id, genre, score FROM gj")
+    val vw = s.sql(
+      """SELECT m.id, v.genre, v.score FROM mvj m LEFT JOIN gjv v
+        |ON m.id = v.movie_id ORDER BY m.id""".stripMargin).collect()
+    assert(vw(1).getString(1) == "" && vw(1).isNullAt(2),
+      s"view side: String '' and Nullable NULL on the miss: ${vw(1)}")
+    // `r.*` over a subquery side fills each of its columns
+    val star = s.sql(
+      """SELECT m.id, r.* FROM mvj m
+        |LEFT JOIN (SELECT movie_id, genre FROM gj) r
+        |ON m.id = r.movie_id ORDER BY m.id""".stripMargin).collect()
+    assert(star(1).getLong(1) == 0L && star(1).getString(2) == "",
+      s"r.* over a subquery must fill 0 and '': ${star(1)}")
     // per-query SETTINGS tail overrides the session default
     val perQ = s.sql(q + " SETTINGS join_use_nulls = 1").collect()
     assert(perQ(1).isNullAt(1) && perQ(1).isNullAt(2),
@@ -2097,6 +2128,20 @@ class ChSqlSpec extends SparkSpec {
     val nulled = s.sql(q).collect()
     assert(nulled(1).isNullAt(1) && nulled(1).isNullAt(2),
       "join_use_nulls = true must surface SQL NULLs")
+  }
+
+  test("INSERT with a column list: omitted Map and Tuple columns read " +
+    "their ClickHouse defaults ({} and per-element zeros), not NULL") {
+    val s = ch
+    s.execute(
+      """CREATE TABLE omt (id UInt32, g String, sc UInt32,
+        |  m Map(String, UInt32), tp Tuple(UInt8, String)) ENGINE = Memory;
+        |INSERT INTO omt (id, g, sc) VALUES (1, 'a', 2);""".stripMargin)
+    val r = s.sql("SELECT m, tp FROM omt").collect().head
+    assert(!r.isNullAt(0) && r.getMap[String, Long](0).isEmpty,
+      s"omitted Map must read {}: $r")
+    assert(!r.isNullAt(1) && r.getStruct(1).getInt(0) == 0 &&
+      r.getStruct(1).getString(1) == "", s"omitted Tuple must read (0, ''): $r")
   }
 
   test("ANTI right columns follow the SESSION join_use_nulls: SET = 1 " +
@@ -2121,63 +2166,70 @@ class ChSqlSpec extends SparkSpec {
 
   test("join_use_nulls = 0 residue: unqualified refs, composite RIGHT-join " +
     "left sides, ASOF LEFT — all fill; shadowed/ambiguous names skip") {
-    // rewrite-level, against a stub catalog: precise wrap placement
-    val stub = new graft.chsql.ChSqlRewrite.Resolver {
-      val cols = Map(
-        "mv" -> Seq("id", "name"), "ge" -> Seq("movie_id", "genre"),
-        "ta" -> Seq("k", "x"), "tb" -> Seq("k", "y"), "tc" -> Seq("k", "z"),
-        "lt" -> Seq("k", "t", "a"), "rt" -> Seq("k", "t", "v"),
-        "amb1" -> Seq("id", "genre"), "amb2" -> Seq("movie_id", "genre"))
-      def resolve(ident: String) =
-        cols.get(ident).map(_ => graft.chsql.ChSqlRewrite.ResolvedTable(ident))
-      override def describe(viewName: String) = cols.get(viewName)
-      override def defaultLiteral(ident: String, column: String) =
-        cols.get(ident).filter(_.exists(_.equalsIgnoreCase(column))).map(_ => "''")
-    }
-    // token render spaces freely — compare space-normalized
-    def rw(q: String) =
-      graft.chsql.ChSqlRewrite.rewrite(q, stub).sql.replace(" ", "")
+    // the shapes of the former rewrite-level placement checks, run
+    // through a real session (the fill is a plan transform now)
+    val s = ch
+    s.execute(
+      """CREATE TABLE rsmv (id UInt32, name String) ENGINE = Memory;
+        |CREATE TABLE rsge (movie_id UInt32, genre String) ENGINE = Memory;
+        |CREATE TABLE amb1 (id UInt32, genre String) ENGINE = Memory;
+        |CREATE TABLE amb2 (movie_id UInt32, genre String) ENGINE = Memory;
+        |CREATE TABLE rsta (k UInt32, x String) ENGINE = Memory;
+        |CREATE TABLE rstb (k UInt32, y String) ENGINE = Memory;
+        |CREATE TABLE rstc (k UInt32, z String) ENGINE = Memory;
+        |CREATE TABLE rslt (k UInt32, t UInt32, a String) ENGINE = Memory;
+        |CREATE TABLE rsrt (k UInt32, t UInt32, v String) ENGINE = Memory;
+        |INSERT INTO rsmv VALUES (1, 'm1'), (2, 'm2');
+        |INSERT INTO rsge VALUES (1, 'drama');
+        |INSERT INTO amb1 VALUES (1, 'a1'), (2, 'a2');
+        |INSERT INTO amb2 VALUES (1, 'b1');
+        |INSERT INTO rsta VALUES (1, 'x1'), (2, 'x2');
+        |INSERT INTO rstb VALUES (1, 'y1'), (2, 'y2');
+        |INSERT INTO rstc VALUES (1, 'z1'), (3, 'z3');
+        |INSERT INTO rslt VALUES (1, 10, 'a10'), (2, 10, 'b10');
+        |INSERT INTO rsrt VALUES (1, 5, 'r5');""".stripMargin)
     // 1. unqualified right-side column fills (ClickHouse resolves
-    //    `genre` to the only table having it)
-    val un = rw("SELECT name, genre FROM mv m LEFT JOIN ge g ON m.id = g.movie_id")
-    assert(un.contains("coalesce(genre") && un.contains("ASgenre"),
-      s"unqualified right col must wrap: $un")
-    assert(!un.contains("coalesce(name"),
-      s"kept-side col must not wrap: $un")
+    //    `genre` to the only table having it); the kept side keeps its
+    //    values
+    val un = s.sql("SELECT name, genre FROM rsmv m LEFT JOIN rsge g " +
+      "ON m.id = g.movie_id ORDER BY name").collect()
+    assert(un.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("m1", "drama"), ("m2", "")),
+      s"unqualified right col must fill: ${un.toSeq}")
+    assert(un.head.schema.fieldNames.toSeq == Seq("name", "genre"))
     // 2. a SELECT-list alias shadows a same-named right column
-    val sh = rw("SELECT m.name AS genre FROM mv m LEFT JOIN ge g " +
-      "ON m.id = g.movie_id ORDER BY genre")
-    assert(!sh.contains("coalesce"), s"shadowed alias must not wrap: $sh")
-    // 3. a name owned by BOTH sides is ambiguous — skip
-    val am = rw("SELECT genre FROM amb1 a LEFT JOIN amb2 b ON a.id = b.movie_id")
-    assert(!am.contains("coalesce"), s"ambiguous name must not wrap: $am")
-    // 4. composite RIGHT-join left side: every plain-table component
-    //    defaults; the inner join's own ON stays untouched
-    val co = rw("SELECT a.x, b.y, c.z FROM ta a JOIN tb b ON a.k = b.k " +
-      "RIGHT JOIN tc c ON a.k = c.k")
-    assert(co.contains("coalesce(a.x") && co.contains("coalesce(b.y"),
-      s"composite left side must wrap both components: $co")
-    assert(co.contains("ONa.k=b.k"),
-      s"inner join condition must stay unwrapped: $co")
-    assert(!co.contains("coalesce(c.z"), s"kept right side must not wrap: $co")
-    // 5. ASOF LEFT JOIN fills its misses like plain LEFT JOIN; the r10
-    //    SQL lowering then requalifies the wrapped ref onto the
-    //    flattened subquery and turns the join into the
-    //    union-and-carry-forward window form
-    val as = rw("SELECT l.a, r.v FROM lt l ASOF LEFT JOIN rt r " +
-      "ON l.k = r.k AND l.t >= r.t")
-    assert(as.contains("coalesce(__asof.v"),
-      s"ASOF LEFT right col must wrap and requalify: $as")
-    assert(as.contains("UNIONALL") && as.contains("last(__rpay,true)"),
-      s"ASOF must lower to the carry-forward window form: $as")
-    // 6. `SETTINGS join_use_nulls = 1` disables every new wrap too
-    val off = graft.chsql.ChSqlRewrite.rewrite(
-      "SELECT name, genre FROM mv m LEFT JOIN ge g ON m.id = g.movie_id " +
-        "SETTINGS join_use_nulls = 1", stub).sql
-    assert(!off.contains("coalesce"), s"=1 must disable the wrap: $off")
+    val sh = s.sql("SELECT m.name AS genre FROM rsmv m LEFT JOIN rsge g " +
+      "ON m.id = g.movie_id ORDER BY genre").collect()
+    assert(sh.map(_.getString(0)).toSeq == Seq("m1", "m2"),
+      s"shadowed alias must read the left column: ${sh.toSeq}")
+    // 3. a name owned by BOTH sides is ambiguous — never silently filled
+    val am = intercept[Exception](s.sql(
+      "SELECT genre FROM amb1 a LEFT JOIN amb2 b ON a.id = b.movie_id")
+      .collect())
+    assert(am.getMessage.toUpperCase.contains("AMBIGUOUS"),
+      s"ambiguous name must fail to resolve: ${am.getMessage}")
+    // 4. composite RIGHT-join left side: every component defaults on
+    //    the miss; the inner join's own matches and the kept right side
+    //    keep their values
+    val co = s.sql("SELECT a.x, b.y, c.z FROM rsta a JOIN rstb b " +
+      "ON a.k = b.k RIGHT JOIN rstc c ON a.k = c.k ORDER BY c.z").collect()
+    assert(co.map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSeq == Seq(("x1", "y1", "z1"), ("", "", "z3")),
+      s"composite left side must fill both components: ${co.toSeq}")
+    // 5. ASOF LEFT JOIN fills its misses like plain LEFT JOIN, through
+    //    the union-and-carry-forward lowering
+    val as = s.sql("SELECT l.a, r.v FROM rslt l ASOF LEFT JOIN rsrt r " +
+      "ON l.k = r.k AND l.t >= r.t ORDER BY l.a").collect()
+    assert(as.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("a10", "r5"), ("b10", "")),
+      s"ASOF LEFT miss must fill '': ${as.toSeq}")
+    // 6. `SETTINGS join_use_nulls = 1` disables every fill too
+    val off = s.sql("SELECT name, genre FROM rsmv m LEFT JOIN rsge g " +
+      "ON m.id = g.movie_id ORDER BY name SETTINGS join_use_nulls = 1")
+      .collect()
+    assert(off(1).isNullAt(1), s"=1 must keep NULL: ${off.toSeq}")
 
     // runtime, through a real session: unqualified + composite fills
-    val s = ch
     s.execute(
       """CREATE TABLE jm2 (id UInt32, title String) ENGINE = Memory;
         |CREATE TABLE jg2 (movie_id UInt32, genre String) ENGINE = Memory;
