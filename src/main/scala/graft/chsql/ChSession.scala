@@ -515,12 +515,14 @@ final class ChSession(val spark: SparkSession,
     if (head.is("INDEX") || head.is("CONSTRAINT") || head.is("PROJECTION"))
       return None // skip-index / constraint defs: not a column
     val name = strip(head.text)
-    // type = tokens until a column-option keyword
+    // type = tokens until a column-option keyword, spaced only between
+    // two words (a named Tuple element is `name Type`)
     val optionKw = Set("DEFAULT", "MATERIALIZED", "ALIAS", "CODEC", "TTL",
       "COMMENT", "EPHEMERAL")
     var i = 1
     val typeSb = new StringBuilder
     while (i < toks.length && !optionKw(toks(i).upper)) {
+      if (i > 1 && toks(i - 1).isIdent && toks(i).isIdent) typeSb += ' '
       typeSb ++= toks(i).text; i += 1
     }
     val parsed = ChTypes.parse(typeSb.result())
@@ -1374,8 +1376,9 @@ final class ChSession(val spark: SparkSession,
   }
 
   /** `t`'s view with its Nullable(T) columns marked in the column
-    * metadata ([[ChJoinDefaults.NullableKey]]): the outer-join fill
-    * keeps their NULLs. A table without Nullable columns reads as is.
+    * metadata ([[ChTypes.NullableKey]]): the outer-join fill, ANTI
+    * right-side reads and ASOF LEFT misses keep their NULLs. A table
+    * without Nullable columns reads as is.
     */
   private def declared(t: ChTable, df: DataFrame): DataFrame = {
     val nullable = t.columns.filter(_.nullable).map(_.name.toLowerCase).toSet
@@ -1383,7 +1386,7 @@ final class ChSession(val spark: SparkSession,
     else df.select(df.columns.toSeq.map { n =>
       val c = col("`" + n.replace("`", "``") + "`")
       if (nullable(n.toLowerCase)) c.as(n, new MetadataBuilder()
-        .putBoolean(ChJoinDefaults.NullableKey, true).build())
+        .putBoolean(ChTypes.NullableKey, true).build())
       else c
     }: _*)
   }
@@ -1459,43 +1462,17 @@ final class ChSession(val spark: SparkSession,
                                         args: Seq[String]): Option[String] =
         materializeTableFunction(fn, args)
 
-      override def describe(viewName: String): Option[Seq[String]] =
-        scala.util.Try(spark.table(viewName).columns.toSeq).toOption
+      override def describe(viewName: String): Option[StructType] =
+        scala.util.Try(spark.table(viewName).schema).toOption
 
       override def enumValues(ident: String,
                               column: String): Option[Map[Int, String]] =
         enumValuesOf(ident, column)
 
-      override def defaultLiteral(ident: String,
-                                  column: String): Option[String] =
-        // the DECLARED column is authoritative for nullability —
-        // Nullable(T)'s ClickHouse default is NULL, plain T's is the
-        // zero value. The runtime view schema cannot distinguish them
-        // (Memory-table inserts widen everything to nullable), so the
-        // fallback keeps the zero-value default.
-        tables.get(parseRef(strip(ident)))
-          .flatMap(_.columns.find(_.name.equalsIgnoreCase(column)))
-          .map(c => ChTypes.defaultLiteralSql(c.dataType, c.nullable))
-          .orElse(resolve(ident).flatMap(rt =>
-            scala.util.Try(spark.table(rt.viewName).schema(column)).toOption)
-            .map(f => ChTypes.defaultLiteralSql(f.dataType)))
-
-      override def nullLiteral(ident: String,
-                               column: String): Option[String] =
-        // nullable = true forces the CAST(NULL AS T) form regardless of
-        // the declared nullability — the join_use_nulls = 1 fill is
-        // NULL for every column type
-        tables.get(parseRef(strip(ident)))
-          .flatMap(_.columns.find(_.name.equalsIgnoreCase(column)))
-          .map(c => ChTypes.defaultLiteralSql(c.dataType, nullable = true))
-          .orElse(resolve(ident).flatMap(rt =>
-            scala.util.Try(spark.table(rt.viewName).schema(column)).toOption)
-            .map(f => ChTypes.defaultLiteralSql(f.dataType, nullable = true)))
-
       // ONE analysis round-trip per distinct subquery text per
-      // statement, shared by all three hooks (the ANTI, ASOF and
-      // LEFT SEMI passes may each probe the same side); per-statement
-      // scope, so a later DDL can never serve a stale schema
+      // statement (the ANTI, ASOF and LEFT SEMI passes may each probe
+      // the same side); per-statement scope, so a later DDL can never
+      // serve a stale schema
       private val subDfCache = mutable.Map
         .empty[String, Option[org.apache.spark.sql.DataFrame]]
       private def subDf(sql: String): Option[org.apache.spark.sql.DataFrame] =
@@ -1525,72 +1502,8 @@ final class ChSession(val spark: SparkSession,
             }
         }
 
-      override def describeQuery(sql: String): Option[Seq[String]] =
-        subDf(sql).map(_.columns.toSeq)
-
-      override def queryDefaultLiterals(sql: String)
-          : Option[Map[String, String]] = queryDefaultsRec(sql, 0)
-
-      /** Declared-nullability passthrough, per FROM COMPONENT: an output
-        * column that IS a plain reference (or a `*` projection) resolves
-        * its default through the one component that owns the name — a
-        * catalog TABLE contributes its declared columns (same Spark type
-        * required; the runtime view schema widens everything to nullable,
-        * so a plain String column would otherwise wrongly default to
-        * NULL), a DERIVED TABLE contributes its own recursively-derived
-        * literal map (so its computed columns already resolved to
-        * result-type defaults — pre-fix a `SELECT *` over a derived
-        * table passed COMPUTED columns through to same-named declared
-        * defaults, the r12 review find), and CTE names / unknowns are
-        * OPAQUE (any opaque component disables the passthrough — no
-        * single-owner proof is possible). Computed outputs keep the
-        * zero-value default of their result type (the documented
-        * fallback convention).
-        */
-      private def queryDefaultsRec(sql: String, depth: Int)
-          : Option[Map[String, String]] =
-        subDf(sql).map { df =>
-          val tk = ChLexer.tokenize(sql)
-          val cteNames = leadingCteNames(tk)
-          val spaces: Vector[Option[Map[String, (String, Option[DataType])]]] =
-            topFromComponents(tk).map {
-              case Left(name) if cteNames(strip(name).toLowerCase) => None
-              case Left(name) => tables.get(parseRef(strip(name))).map(t =>
-                t.columns.groupBy(_.name.toLowerCase).collect {
-                  case (n, Seq(c)) => n ->
-                    (ChTypes.defaultLiteralSql(c.dataType, c.nullable),
-                      Some(c.dataType): Option[DataType])
-                })
-              case Right(inner) =>
-                if (depth >= 3) None
-                else queryDefaultsRec(inner, depth + 1).map(_.map {
-                  case (n, l) =>
-                    n.toLowerCase -> (l, None: Option[DataType])
-                })
-            }
-          val pass = outerBareSelectItems(tk)
-          def resolveSrc(name: String, dt: DataType): Option[String] =
-            if (spaces.isEmpty || spaces.contains(None)) None
-            else spaces.flatMap(_.get.get(name)) match {
-              case Vector((lit, tdt)) if tdt.forall(_ == dt) => Some(lit)
-              case _ => None // unclaimed, ambiguous, or type-mismatched
-            }
-          df.schema.fields.map { f =>
-            val src = pass.flatMap { case (bare, star) =>
-              bare.get(f.name.toLowerCase)
-                .orElse(if (star) Some(f.name.toLowerCase) else None)
-            }
-            val lit = src.flatMap(n => resolveSrc(n, f.dataType))
-              .getOrElse(ChTypes.defaultLiteralSql(f.dataType))
-            f.name -> lit
-          }.toMap
-        }
-
-      override def queryNullLiterals(sql: String)
-          : Option[Map[String, String]] =
-        subDf(sql).map(_.schema.fields.map(f =>
-          f.name -> ChTypes.defaultLiteralSql(f.dataType,
-            nullable = true)).toMap)
+      override def describeQuery(sql: String): Option[StructType] =
+        subDf(sql).map(_.schema)
 
       override def joinUseNulls: Boolean = {
         // ClickHouse Bool settings accept 1/0 and true/false
@@ -2660,10 +2573,10 @@ final class ChSession(val spark: SparkSession,
 
   private var attaching = false
 
-  /** Depth of nested schema/default probes ([[ChSqlRewrite.Resolver]]'s
-    * describeQuery / queryDefaultLiterals / queryNullLiterals) — session
-    * state because each nested runSelect builds a FRESH resolver whose
-    * per-statement cache cannot see its parents'.
+  /** Depth of nested schema probes ([[ChSqlRewrite.Resolver]]'s
+    * describeQuery) — session state because each nested runSelect
+    * builds a FRESH resolver whose per-statement cache cannot see its
+    * parents'.
     */
   private val probeDepth: ThreadLocal[Integer] =
     ThreadLocal.withInitial(() => Integer.valueOf(0))
@@ -2939,175 +2852,6 @@ final class ChSession(val spark: SparkSession,
       fail(s"no such table: ${ref._1}.${ref._2}")))
 
   private def strip(s: String): String = s.replace("`", "")
-
-  /** Names bound by a leading `WITH name AS (…) [, name AS (…)]*` CTE
-    * list (lowercased). These occupy table position after FROM/JOIN in
-    * the body but carry no declared catalog defaults — a CTE whose name
-    * collides with a catalog table must not contribute that table's
-    * columns to the defaults passthrough. The scalar form
-    * (`WITH expr AS name`) binds no table names and stops the scan.
-    */
-  private def leadingCteNames(tk: Vector[ChLexer.Token]): Set[String] = {
-    val out = scala.collection.mutable.Set.empty[String]
-    if (tk.nonEmpty && tk.head.is("WITH")) {
-      var i = 1
-      var ok = true
-      while (ok && i + 2 < tk.length && tk(i).isIdent && !tk(i).isString &&
-        tk(i + 1).is("AS") && tk(i + 2).text == "(") {
-        out += strip(tk(i).text).toLowerCase
-        var j = i + 2
-        var depth = 0
-        while (j < tk.length && {
-          if (tk(j).text == "(") depth += 1
-          else if (tk(j).text == ")") depth -= 1
-          depth != 0 || tk(j).text != ")"
-        }) j += 1
-        j += 1
-        if (j < tk.length && tk(j).text == ",") i = j + 1 else ok = false
-      }
-    }
-    out.toSet
-  }
-
-  /** The outermost (depth-0) FROM region's components, in order:
-    * `Left(ident)` for a plain table/CTE reference, `Right(innerSql)`
-    * for a parenthesized derived table. Aliases, join keywords and
-    * ON/USING condition tokens are skipped; condition parens are
-    * balanced so their contents never read as components.
-    */
-  private def topFromComponents(tk: Vector[ChLexer.Token])
-      : Vector[Either[String, String]] = {
-    val enders = Set("WHERE", "PREWHERE", "GROUP", "ORDER", "HAVING",
-      "LIMIT", "UNION", "INTERSECT", "EXCEPT", "SETTINGS", "WINDOW",
-      "QUALIFY")
-    var depth = 0
-    var from = -1
-    var end = -1
-    for (i <- tk.indices if end < 0) {
-      val t = tk(i)
-      if (t.text == "(") depth += 1
-      else if (t.text == ")") depth -= 1
-      else if (depth == 0 && from < 0 && t.is("FROM")) from = i
-      else if (depth == 0 && from >= 0 && !t.isString &&
-        enders(t.upper)) end = i
-    }
-    if (from < 0) return Vector.empty
-    if (end < 0) end = tk.length
-    def closeOf(open: Int): Int = {
-      var d = 0
-      var j = open
-      while (j < end) {
-        if (tk(j).text == "(") d += 1
-        else if (tk(j).text == ")") { d -= 1; if (d == 0) return j }
-        j += 1
-      }
-      end
-    }
-    val out = Vector.newBuilder[Either[String, String]]
-    var p = from + 1
-    var expect = true
-    // `ARRAY JOIN col [, col2]` is a column-expansion clause, not a
-    // FROM-list member: its JOIN token must not re-arm component
-    // expectation (the expanded column could collide with a catalog
-    // table name and mis-enter the ownership space — r12 advisor find),
-    // and its commas separate arrays, not comma-joined tables. The mode
-    // clears at the next real join keyword.
-    var inArrayJoin = false
-    while (p < end) {
-      val t = tk(p)
-      if (t.text == "(") {
-        val close = closeOf(p)
-        if (expect) {
-          out += Right(ChLexer.render(tk.slice(p + 1, close)))
-          expect = false
-        }
-        p = close + 1
-      } else {
-        if (t.is("JOIN")) {
-          inArrayJoin = p > 0 && tk(p - 1).is("ARRAY")
-          expect = !inArrayJoin
-        } else if (t.text == ",") {
-          if (!inArrayJoin) expect = true
-        } else if (expect && t.isIdent && !t.isString) {
-          out += Left(strip(t.text)); expect = false
-        }
-        p += 1
-      }
-    }
-    out.result()
-  }
-
-  /** The outermost SELECT list's PLAIN column references: output name →
-    * source column name (both lowercased, unqualified). An item counts
-    * only when it is a bare `col` / `alias.col`, optionally `AS`-aliased
-    * — anything computed is excluded, so a computed expression sharing a
-    * declared column's name cannot inherit its declared default. The
-    * boolean is the `*` / `t.*` flag (those pass every remaining output
-    * name through as itself). None = no passthrough at all: a top-level
-    * set operation's branches could disagree on what an output name
-    * refers to, so result-type defaults win there.
-    */
-  private def outerBareSelectItems(tk: Vector[ChLexer.Token])
-      : Option[(Map[String, String], Boolean)] = {
-    var depth = 0
-    var sel = -1
-    var end = -1
-    var setOp = false
-    for (i <- tk.indices) {
-      val t = tk(i)
-      if (t.text == "(") depth += 1
-      else if (t.text == ")") depth -= 1
-      else if (depth == 0) {
-        // `* EXCEPT (cols)` / `t.* EXCEPT (cols)` is ClickHouse's
-        // column-exclusion modifier, not a set operation (r12 review
-        // find; the qualified form is one glued token, r13)
-        if (t.is("UNION") || t.is("INTERSECT") ||
-          (t.is("EXCEPT") && !(i > 0 && tk(i - 1).text.endsWith("*")))) setOp = true
-        else if (sel < 0 && t.is("SELECT")) sel = i
-        else if (sel >= 0 && end < 0 && t.is("FROM")) end = i
-      }
-    }
-    if (sel < 0 || setOp) return None
-    if (end < 0) end = tk.length
-    var items = Vector.newBuilder[Vector[ChLexer.Token]]
-    var cur = Vector.newBuilder[ChLexer.Token]
-    depth = 0
-    var i = sel + 1
-    if (i < end && tk(i).is("DISTINCT")) i += 1
-    while (i < end) {
-      val t = tk(i)
-      if (t.text == "(") depth += 1
-      else if (t.text == ")") depth -= 1
-      if (t.text == "," && depth == 0) { items += cur.result(); cur = Vector.newBuilder }
-      else cur += t
-      i += 1
-    }
-    items += cur.result()
-    val bare = Map.newBuilder[String, String]
-    var star = false
-    items.result().foreach { it =>
-      def suffix(s: String): String = {
-        val v = strip(s); val d = v.lastIndexOf('.')
-        (if (d >= 0) v.substring(d + 1) else v).toLowerCase
-      }
-      def isRef(t: ChLexer.Token): Boolean =
-        t.isIdent && !t.isString && !t.text.endsWith("*")
-      it match {
-        // bare `*` / `t.*`, with or without an `EXCEPT (cols)` tail —
-        // the excluded names are absent from the output either way
-        case v if v.nonEmpty &&
-          (v.head.text == "*" || v.head.text.endsWith(".*")) &&
-          (v.length == 1 || v(1).is("EXCEPT")) => star = true
-        case Vector(t) if isRef(t) => bare += suffix(t.text) -> suffix(t.text)
-        case Vector(t, a) if isRef(t) && isRef(a) =>
-          bare += suffix(a.text) -> suffix(t.text)
-        case Vector(t, as_, a) if isRef(t) && as_.is("AS") && isRef(a) =>
-          bare += suffix(a.text) -> suffix(t.text)
-        case _ => ()
-      }
-    }
-    Some((bare.result(), star))
-  }
 
   /** The literal partition value of an ALTER ... PARTITION clause —
     * `202406`, `'2024-06-01'`, or a tuple `(1, 'x')`. Tuples join with

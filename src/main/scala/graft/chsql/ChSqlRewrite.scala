@@ -1,6 +1,7 @@
 package graft.chsql
 
 import ChLexer.Token
+import org.apache.spark.sql.types.StructType
 
 /** Token-level ClickHouse-SELECT → Spark-SQL rewriter. Pure text in,
   * text + post-ops out; the stateful parts (catalog names, FINAL fold
@@ -45,10 +46,13 @@ object ChSqlRewrite {
     def resolveTableFunction(fn: String, args: Seq[String]): Option[String] =
       None
 
-    /** Column names of an already-resolved view — powers the
-      * `COLUMNS('regex')` dynamic-projection macro (lecture_04/08).
+    /** Schema of an already-resolved view — its column names power the
+      * `COLUMNS('regex')` dynamic-projection macro (lecture_04/08) and
+      * the ASOF lowering's catalog sides; its types and declared
+      * nullability ([[ChTypes.NullableKey]]) give the type defaults an
+      * unmatched ANTI or ASOF LEFT catalog side reads.
       */
-    def describe(viewName: String): Option[Seq[String]] = None
+    def describe(viewName: String): Option[StructType] = None
 
     /** The Enum8/16 value→name mapping of `column` on the (CH-named)
       * table `ident`, when that column is enum-typed — powers
@@ -58,51 +62,14 @@ object ChSqlRewrite {
     def enumValues(ident: String, column: String): Option[Map[Int, String]] =
       None
 
-    /** SQL literal text of `column`'s ClickHouse type default on the
-      * (CH-named) table `ident` — powers reading right-side columns of
-      * an ANTI JOIN (homeworks/hw06.md:137-149), where every surviving
-      * row is by definition unmatched, and the miss fill of the ASOF
-      * LEFT lowering under join_use_nulls = 0.
+    /** Analyzed output schema of an arbitrary dialect SELECT (analysis
+      * only, no execution) — what [[describe]] is for a SUBQUERY or CTE
+      * side (the ASOF lowering, LEFT SEMI, and the ANTI / ASOF LEFT
+      * defaults), where no catalog entry exists. Plain references keep
+      * their declared nullability in the column metadata; computed
+      * columns carry none and read their result type's zero value.
       */
-    def defaultLiteral(ident: String, column: String): Option[String] =
-      None
-
-    /** SQL literal text of a TYPED NULL (`CAST(NULL AS T)`) for
-      * `column` on the (CH-named) table `ident` — what ANTI right-side
-      * references surface under `join_use_nulls = 1`. A bare NULL would
-      * give the output column VOID type, and the nullif(d, d) trick
-      * fails analysis on Map-typed columns (Spark rejects map
-      * equality).
-      */
-    def nullLiteral(ident: String, column: String): Option[String] =
-      None
-
-    /** Column names of an arbitrary dialect SELECT (analysis only, no
-      * execution) — powers the subquery sides of the ASOF SQL lowering
-      * and of LEFT SEMI, where no catalog entry exists to take a column
-      * list from.
-      */
-    def describeQuery(sql: String): Option[Seq[String]] = None
-
-    /** name → type-default literal map of an arbitrary dialect
-      * SELECT's output columns — what an unmatched ANTI or ASOF LEFT
-      * right side surfaces under `join_use_nulls = 0` when that side is
-      * a SUBQUERY. Best-effort declared-nullability passthrough: an
-      * output column naming exactly one declared catalog column takes
-      * its declared default (runtime schemas widen everything to
-      * nullable); computed columns keep the zero-value default of
-      * their result type.
-      */
-    def queryDefaultLiterals(sql: String): Option[Map[String, String]] =
-      None
-
-    /** name → typed-NULL literal map (`CAST(NULL AS T)`) of an
-      * arbitrary dialect SELECT's output columns — the ANTI right-side
-      * substitution under `join_use_nulls = 1` when that side is a
-      * subquery.
-      */
-    def queryNullLiterals(sql: String): Option[Map[String, String]] =
-      None
+    def describeQuery(sql: String): Option[StructType] = None
 
     /** The session's `join_use_nulls` setting: false (ClickHouse's
       * default, 0) makes unmatched outer-join columns read their TYPE
@@ -337,6 +304,7 @@ object ChSqlRewrite {
           val cols = for {
             f <- Some(from).filter(f => f >= 0 && f + 1 < t.length)
             names <- resolver.describe(strip(t(f + 1).text))
+              .map(_.fieldNames.toSeq)
             re = regex.r
             hit = names.filter(n => re.findFirstIn(n).isDefined)
             if hit.nonEmpty
@@ -1201,7 +1169,7 @@ object ChSqlRewrite {
           val clash = tables.filterNot(_ == owner).exists { id =>
             resolver.resolve(id)
               .flatMap(rt => resolver.describe(rt.viewName)) match {
-              case Some(cols) => cols.exists(_.equalsIgnoreCase(col))
+              case Some(cols) => cols.fieldNames.exists(_.equalsIgnoreCase(col))
               case None => true
             }
           }
@@ -1872,8 +1840,8 @@ object ChSqlRewrite {
       if (leftInner.isEmpty) leftRef else "")
     if (leftAlias.isEmpty) bad("a subquery left side requires an alias")
     val cteSc = cteScopes(toks)
-    def colsOfRef(ref: String, inner: Option[String],
-                  pos: Int): Seq[String] =
+    def schemaOf(ref: String, inner: Option[String],
+                 pos: Int): StructType =
       inner match {
         case Some(sql) => resolver.describeQuery(sql)
           .getOrElse(bad("could not derive the subquery side's column " +
@@ -1892,20 +1860,16 @@ object ChSqlRewrite {
           .getOrElse(bad(s"table '$ref' has no catalog schema - the " +
             "lowering needs its column list"))
       }
-    val leftCols = colsOfRef(leftRef, leftInner, fromIdx + 1)
-    val rightCols = colsOfRef(rightRef, rightInner, t0)
+    val leftCols = schemaOf(leftRef, leftInner, fromIdx + 1).fieldNames.toSeq
+    val rightSchema = schemaOf(rightRef, rightInner, t0)
+    val rightCols = rightSchema.fieldNames.toSeq
     // join_use_nulls = 0: an ASOF LEFT miss reads the right side's type
-    // defaults — the lowering leaves no Join node for ChJoinDefaults
+    // defaults (NULL where declared Nullable) — the lowering leaves no
+    // Join node for ChJoinDefaults
     val rightDefaults: Map[String, String] =
       if (!isLeftJoin || useNulls) Map.empty
-      else (rightInner match {
-        case Some(sql) => resolver.queryDefaultLiterals(sql)
-        case None if cteShadowed(cteSc, stripTicks(rightRef), t0) =>
-          cteProbe(toks, stripTicks(rightRef))
-            .flatMap(resolver.queryDefaultLiterals)
-        case None => Some(rightCols.flatMap(c =>
-          resolver.defaultLiteral(rightRef, c).map(c -> _)).toMap)
-      }).getOrElse(Map.empty)
+      else rightSchema.fields.map(f => f.name -> ChTypes.defaultLiteralSql(
+        f.dataType, ChTypes.declaredNullable(f.metadata))).toMap
     // ---- condition: equi keys + the one time inequality
     var keys = Vector.empty[(String, String)] // (left col, right col)
     var timePair: Option[(String, String, String)] = None // lcol, rcol, op
@@ -2113,10 +2077,11 @@ object ChSqlRewrite {
     * a typed NULL instead of the type default — the unmatched-side
     * fill rule follows the setting for ANTI exactly as for outer joins
     * (found by the r10 join fuzzer: the pre-fix substitution ignored
-    * the setting). The right side may be a catalog table (declared
-    * defaults) or — r11 — an aliased subquery, whose literals
-    * synthesize from its resolved output schema
-    * ([[Resolver.queryDefaultLiterals]] / [[Resolver.queryNullLiterals]]).
+    * the setting). The right side may be a catalog table, an aliased
+    * subquery or a CTE: each literal comes from the side's analyzed
+    * schema ([[Resolver.describe]] / [[Resolver.describeQuery]]), typed
+    * by the column and NULL where the column metadata declares it
+    * Nullable — the same declaration the outer-join fill reads.
     */
   private def rewriteAntiRightCols(toks: Vector[Token],
                                    resolver: Resolver,
@@ -2126,7 +2091,14 @@ object ChSqlRewrite {
     // a subquery's inner text (r11) — and the segment span
     // [ANTI .. end of ON/USING condition))
     final case class Seg(alias: String, table: Option[String],
-                         subSql: Option[String], from: Int, until: Int)
+                         subSql: Option[String], from: Int, until: Int) {
+      // analyzed only when a reference actually reads the side
+      lazy val schema: Option[StructType] = table match {
+        case Some(tb) => resolver.resolve(tb).flatMap(rt =>
+          resolver.describe(rt.viewName))
+        case None => subSql.flatMap(resolver.describeQuery)
+      }
+    }
     val term = joinCondTerm
     val segs = Vector.newBuilder[Seg]
     var i = 0
@@ -2139,12 +2111,11 @@ object ChSqlRewrite {
         while (j < toks.length && (toks(j).is("LEFT") || toks(j).is("RIGHT")))
           j += 1
         if (j < toks.length && toks(j).is("JOIN") && j + 1 < toks.length) {
-          // the right side: a plain table (catalog defaults), a
-          // subquery (result-type defaults via queryDefaultLiterals,
-          // r11 — pre-r11 a right-column read failed to resolve), or a
-          // CTE-bound name (r12: a CTE IS a subquery — probed through
-          // the statement's WITH prefix, never as a same-named catalog
-          // table)
+          // the right side: a plain table (its view's schema), a
+          // subquery (its analyzed schema, r11 — pre-r11 a right-column
+          // read failed to resolve), or a CTE-bound name (r12: a CTE IS
+          // a subquery — probed through the statement's WITH prefix,
+          // never as a same-named catalog table)
           val isSub = toks(j + 1).text == "("
           val subClose = if (isSub) matchParen(toks, j + 1) else -1
           val isCte = !isSub &&
@@ -2195,16 +2166,6 @@ object ChSqlRewrite {
     val sgs = segs.result()
     if (sgs.isEmpty) return toks
     val (blockOf, inList) = selectBlockScopes(toks)
-    // per-subquery literal maps, cached per inner text and only paid
-    // when a reference actually probes them
-    val subDefCache = scala.collection.mutable.Map
-      .empty[String, Option[Map[String, String]]]
-    def subDefaults(sql: String): Option[Map[String, String]] =
-      subDefCache.getOrElseUpdate(sql, resolver.queryDefaultLiterals(sql))
-    val subNullCache = scala.collection.mutable.Map
-      .empty[String, Option[Map[String, String]]]
-    def subNulls(sql: String): Option[Map[String, String]] =
-      subNullCache.getOrElseUpdate(sql, resolver.queryNullLiterals(sql))
     // the qualifier may be backtick-quoted (`g`.genre) — match and strip
     // the alias in either spelling, same contract as rewriteAnyJoin's
     // stripQual
@@ -2221,32 +2182,19 @@ object ChSqlRewrite {
       val seg = sgs.find(s => t.isIdent && !t.isString &&
         stripQual(s.alias, t.text).isDefined &&
         (p < s.from || p >= s.until) && blockOf(p) == blockOf(s.from))
-      // the resolver call also validates the column exists; only the
-      // literal itself switches with the setting. Under = 1 the
-      // substitution is a TYPED null, CAST(NULL AS T) — a bare NULL
-      // would give the output column VOID type, which parquet writers
-      // (and schema compares) reject, and the pre-fix nullif(d, d)
-      // spelling failed analysis on Map columns (Spark rejects map
-      // equality). Resolvers without nullLiteral keep the nullif
-      // fallback for non-Map types.
+      // the schema lookup also validates the column exists; only the
+      // literal itself switches with the setting. A NULL is a TYPED
+      // null, CAST(NULL AS T) — a bare NULL would give the output
+      // column VOID type, which parquet writers (and schema compares)
+      // reject.
       seg.flatMap { s =>
         // the column part may be backtick-quoted (`g`.`genre`, and the
-        // r13 star expansion emits ticked refs) — the catalog lookup
-        // wants the bare name
+        // r13 star expansion emits ticked refs) — the lookup wants the
+        // bare name
         val c = stripTicks(stripQual(s.alias, t.text).get)
-        s.table match {
-          case Some(tb) =>
-            if (useNulls)
-              resolver.nullLiteral(tb, c).orElse(
-                resolver.defaultLiteral(tb, c)
-                  .map(lit => s"nullif($lit, $lit)"))
-            else resolver.defaultLiteral(tb, c)
-          case None => s.subSql.flatMap { sql =>
-            val m = if (useNulls) subNulls(sql) else subDefaults(sql)
-            m.flatMap(_.collectFirst {
-              case (n, v) if n.equalsIgnoreCase(stripTicks(c)) => v })
-          }
-        }
+        s.schema.flatMap(_.fields.find(_.name.equalsIgnoreCase(c)))
+          .map(f => ChTypes.defaultLiteralSql(f.dataType,
+            useNulls || ChTypes.declaredNullable(f.metadata)))
       } match {
         case Some(lit0) =>
           val colName = t.text.substring(t.text.indexOf('.') + 1)
@@ -2455,7 +2403,7 @@ object ChSqlRewrite {
           .flatMap(resolver.describeQuery)
         else resolver.resolve(strip(toks(t0).text))
           .flatMap(rt => resolver.describe(rt.viewName))
-      cols.map(_.map(_.toLowerCase).toSet).getOrElse(Set.empty)
+      cols.map(_.fieldNames.map(_.toLowerCase).toSet).getOrElse(Set.empty)
     }
     def qualRef(text: String): Boolean =
       alias.nonEmpty && (text.startsWith(alias + ".") ||
@@ -2647,6 +2595,7 @@ object ChSqlRewrite {
     var changed = false
     def colsOf(table: String): Option[Seq[String]] =
       resolver.resolve(table).flatMap(rt => resolver.describe(rt.viewName))
+        .map(_.fieldNames.toSeq)
     while (p < toks.length) {
       val t = toks(p)
       val topLevel = inList(p) &&
@@ -2984,13 +2933,8 @@ object ChSqlRewrite {
     * inside a subquery) — callers then treat the side as unknown-schema
     * and skip conservatively, NEVER as the same-named catalog table.
     * Powers the ANTI and ASOF LEFT fills for CTE join sides: a CTE
-    * is a subquery, so misses fill its RESULT-type defaults — and
-    * because the probe's outer select list IS the CTE's own, the
-    * [[Resolver.queryDefaultLiterals]] plain-reference passthrough
-    * applies to the CTE's real items (pre-fix the probe was
-    * `SELECT * FROM name`, whose `*` passed COMPUTED CTE columns
-    * through to same-named declared defaults — the r12 advisor-find
-    * coincidence bug, reintroduced one level up).
+    * is a subquery, so misses fill the defaults of its analyzed output
+    * schema ([[Resolver.describeQuery]]).
     */
   private def cteProbe(toks: Vector[Token], name: String): Option[String] = {
     if (toks.isEmpty || !toks.head.is("WITH")) return None

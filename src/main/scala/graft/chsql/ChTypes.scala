@@ -117,6 +117,20 @@ object ChTypes {
     }
   }
 
+  /** Column-metadata key: true when the column is declared Nullable(T).
+    * `ChSession` sets it on every table view; Catalyst carries it through
+    * plain references, renames, subqueries, views and CTEs, so an
+    * analyzed schema tells which of its columns default to NULL.
+    */
+  val NullableKey = "graft.ch.nullable"
+
+  /** Whether a column with this metadata is declared Nullable(T)
+    * ([[NullableKey]]). A runtime schema's `nullable` flag cannot tell:
+    * Memory-table inserts and outer joins widen every column to nullable.
+    */
+  def declaredNullable(metadata: Metadata): Boolean =
+    metadata.contains(NullableKey) && metadata.getBoolean(NullableKey)
+
   /** The ClickHouse type DEFAULT of a column of Spark type `dt` — what
     * an unmatched outer-join side reads under `join_use_nulls = 0`
     * ([[graft.plans.ChJoinDefaults]]), what right-side columns of an

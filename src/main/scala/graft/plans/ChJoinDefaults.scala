@@ -22,10 +22,11 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   *
   *  - A column declared `Nullable(T)` keeps NULL, its ClickHouse
   *    default. The declaration rides in the column metadata under
-  *    [[NullableKey]] (set by `ChSession` on every table view), and
-  *    Catalyst carries it through plain references, subqueries, views
-  *    and CTEs. Columns without it (computed columns, DataFrames
-  *    registered outside `ChSession`) fill the zero value of their type.
+  *    [[graft.chsql.ChTypes.NullableKey]] (set by `ChSession` on every
+  *    table view), and Catalyst carries it through plain references,
+  *    subqueries, views and CTEs. Columns without it (computed columns,
+  *    DataFrames registered outside `ChSession`) fill the zero value of
+  *    their type.
   *  - `View` nodes are not entered: a dialect view was filled when its
   *    own SELECT ran, and table views (FINAL folds) hold engine joins
   *    whose NULLs are not join semantics.
@@ -36,8 +37,10 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
   */
 object ChJoinDefaults extends Rule[LogicalPlan] {
 
-  /** Column-metadata key: true when the column is declared Nullable(T). */
-  val NullableKey = "graft.ch.nullable"
+  /** The declared-nullability key the fill reads
+    * ([[graft.chsql.ChTypes.NullableKey]]).
+    */
+  val NullableKey: String = ChTypes.NullableKey
 
   /** The fill over `df`'s plan; `df` itself when it has no outer join. */
   def apply(df: DataFrame): DataFrame = {
@@ -100,9 +103,7 @@ object ChJoinDefaults extends Rule[LogicalPlan] {
     */
   private def filled(a: Attribute): Option[Alias] = {
     val default = ChTypes.defaultValue(a.dataType)
-    val declaredNullable = a.metadata.contains(NullableKey) &&
-      a.metadata.getBoolean(NullableKey)
-    if (declaredNullable || default.value == null) None
+    if (ChTypes.declaredNullable(a.metadata) || default.value == null) None
     else Some(Alias(Coalesce(Seq(a, default)), a.name)(exprId = a.exprId,
       qualifier = a.qualifier, explicitMetadata = Some(a.metadata)))
   }

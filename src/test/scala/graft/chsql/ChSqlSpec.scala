@@ -2039,8 +2039,11 @@ class ChSqlSpec extends SparkSpec {
     // substitution applies only to LEFT/bare ANTI (rewrite-level check:
     // the qualified reference must survive untouched)
     val alwaysEmpty = new graft.chsql.ChSqlRewrite.Resolver {
-      def resolve(ident: String) = None
-      override def defaultLiteral(ident: String, column: String) = Some("''")
+      import org.apache.spark.sql.types._
+      def resolve(ident: String) =
+        if (ident == "gex") Some(ChSqlRewrite.ResolvedTable("gex")) else None
+      override def describe(viewName: String) =
+        Some(StructType(Seq(StructField("genre", StringType))))
     }
     val r = graft.chsql.ChSqlRewrite.rewrite(
       "SELECT g.genre FROM mvx m RIGHT ANTI JOIN gex g ON m.id = g.movie_id",
@@ -2135,13 +2138,19 @@ class ChSqlSpec extends SparkSpec {
     val s = ch
     s.execute(
       """CREATE TABLE omt (id UInt32, g String, sc UInt32,
-        |  m Map(String, UInt32), tp Tuple(UInt8, String)) ENGINE = Memory;
+        |  m Map(String, UInt32), tp Tuple(UInt8, String),
+        |  tn Tuple(a UInt8, b String)) ENGINE = Memory;
         |INSERT INTO omt (id, g, sc) VALUES (1, 'a', 2);""".stripMargin)
-    val r = s.sql("SELECT m, tp FROM omt").collect().head
+    val r = s.sql("SELECT m, tp, tn FROM omt").collect().head
     assert(!r.isNullAt(0) && r.getMap[String, Long](0).isEmpty,
       s"omitted Map must read {}: $r")
     assert(!r.isNullAt(1) && r.getStruct(1).getInt(0) == 0 &&
       r.getStruct(1).getString(1) == "", s"omitted Tuple must read (0, ''): $r")
+    // a NAMED Tuple keeps its element names through the DDL
+    assert(!r.isNullAt(2) && r.getStruct(2).getInt(0) == 0 &&
+      r.getStruct(2).getString(1) == "" &&
+      r.getStruct(2).schema.fieldNames.toSeq == Seq("a", "b"),
+      s"omitted named Tuple must read (0, ''): $r")
   }
 
   test("ANTI right columns follow the SESSION join_use_nulls: SET = 1 " +
@@ -2702,6 +2711,26 @@ class ChSqlSpec extends SparkSpec {
         |ORDER BY l.a""".stripMargin).collect()
     assert(anti.length == 1 && anti(0).getString(0) == "a9" &&
       anti(0).getString(1) == "", anti.toSeq.toString)
+    // a two-CTE chain: the declared Nullable v passes through the
+    // earlier CTE, so the ANTI read and the ASOF LEFT miss read NULL,
+    // as the LEFT JOIN miss does
+    val chain = "WITH c1 AS (SELECT k, v, x FROM pw), " +
+      "c2 AS (SELECT k, v, x FROM c1) "
+    val chainAnti = s.sql(chain +
+      """SELECT l.a AS a, r.v AS v
+        |FROM pwl l LEFT ANTI JOIN c2 r ON l.k = r.k
+        |ORDER BY l.a""".stripMargin).collect()
+    assert(chainAnti.length == 1 && chainAnti(0).getString(0) == "a9" &&
+      chainAnti(0).isNullAt(1), chainAnti.toSeq.toString)
+    s.execute("CREATE TABLE pwt (k UInt32, a String, t UInt32) ENGINE = Memory;" +
+      "INSERT INTO pwt VALUES (1, 'a1', 9), (9, 'a9', 9);")
+    val chainAsof = s.sql(chain +
+      """SELECT l.a AS a, r.v AS v
+        |FROM pwt l ASOF LEFT JOIN c2 r ON l.k = r.k AND l.t >= r.x
+        |ORDER BY l.a""".stripMargin).collect()
+    assert(chainAsof.length == 2 && chainAsof(0).getString(1) == "p1" &&
+      chainAsof(1).getString(0) == "a9" && chainAsof(1).isNullAt(1),
+      chainAsof.toSeq.toString)
   }
 
   test("qualified star `g.*` sides resolve defaults through the " +
