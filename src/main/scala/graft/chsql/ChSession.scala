@@ -1377,8 +1377,9 @@ final class ChSession(val spark: SparkSession,
 
   /** `t`'s view with its Nullable(T) columns marked in the column
     * metadata ([[ChTypes.NullableKey]]): the outer-join fill, ANTI
-    * right-side reads and ASOF LEFT misses keep their NULLs. A table
-    * without Nullable columns reads as is.
+    * right-side reads (both [[ChJoinDefaults.select]]) and ASOF LEFT
+    * misses keep their NULLs. A table without Nullable columns reads
+    * as is.
     */
   private def declared(t: ChTable, df: DataFrame): DataFrame = {
     val nullable = t.columns.filter(_.nullable).map(_.name.toLowerCase).toSet
@@ -1470,9 +1471,9 @@ final class ChSession(val spark: SparkSession,
         enumValuesOf(ident, column)
 
       // ONE analysis round-trip per distinct subquery text per
-      // statement (the ANTI, ASOF and LEFT SEMI passes may each probe
-      // the same side); per-statement scope, so a later DDL can never
-      // serve a stale schema
+      // statement (the ASOF and LEFT SEMI passes may each probe the
+      // same side); per-statement scope, so a later DDL can never serve
+      // a stale schema
       private val subDfCache = mutable.Map
         .empty[String, Option[org.apache.spark.sql.DataFrame]]
       private def subDf(sql: String): Option[org.apache.spark.sql.DataFrame] =
@@ -1529,8 +1530,7 @@ final class ChSession(val spark: SparkSession,
       }
     }
     val rw = ChSqlRewrite.rewrite(query, resolver)
-    var df = spark.sql(rw.sql)
-    if (!rw.joinUseNulls) df = ChJoinDefaults(df)
+    var df = ChJoinDefaults.select(spark, rw.sql, rw.joinUseNulls)
     rw.limitBy.foreach { lb =>
       val order = lb.orderSql match {
         case Some(o) => ChTypes.splitTopLevel(o).map(parseOrderCol)

@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.StructType
   * (dropped). ClickHouse function NAMES need no rewriting — the whole
   * dialect is injected into every session by
   * [[graft.plans.GraftExtensions]]. The outer-join default fill
-  * (`join_use_nulls = 0`) is not a text rewrite: the caller runs
-  * [[graft.plans.ChJoinDefaults]] over the analyzed plan.
+  * (`join_use_nulls = 0`) and ANTI joins' right-side reads are not text
+  * rewrites: the caller runs [[graft.plans.ChJoinDefaults.select]] over
+  * the parsed and analyzed plan.
   */
 object ChSqlRewrite {
 
@@ -50,7 +51,7 @@ object ChSqlRewrite {
       * `COLUMNS('regex')` dynamic-projection macro (lecture_04/08) and
       * the ASOF lowering's catalog sides; its types and declared
       * nullability ([[ChTypes.NullableKey]]) give the type defaults an
-      * unmatched ANTI or ASOF LEFT catalog side reads.
+      * unmatched ASOF LEFT catalog side reads.
       */
     def describe(viewName: String): Option[StructType] = None
 
@@ -64,8 +65,8 @@ object ChSqlRewrite {
 
     /** Analyzed output schema of an arbitrary dialect SELECT (analysis
       * only, no execution) — what [[describe]] is for a SUBQUERY or CTE
-      * side (the ASOF lowering, LEFT SEMI, and the ANTI / ASOF LEFT
-      * defaults), where no catalog entry exists. Plain references keep
+      * side (the ASOF lowering, LEFT SEMI, and the ASOF LEFT defaults),
+      * where no catalog entry exists. Plain references keep
       * their declared nullability in the column metadata; computed
       * columns carry none and read their result type's zero value.
       */
@@ -105,10 +106,9 @@ object ChSqlRewrite {
     "QUALIFY", "FORMAT", "INTO")
 
   /** Keywords that end a join's ON/USING condition span at depth 0 —
-    * ONE set shared by rewriteAnyJoin's ON scan and rewriteAntiRightCols'
-    * segment scan, so clause coverage cannot drift between the two
-    * (pre-fix each had hand-copied the list and each was missing
-    * keywords the other had: PREWHERE vs INTERSECT/EXCEPT).
+    * ONE set shared by every pass that scans a join condition
+    * (rewriteAnyJoin, the ASOF lowering, rewriteSemiRightRefs), so
+    * clause coverage cannot drift between them.
     */
   private val joinCondTerm = clauseStarters ++ Set("PREWHERE", "JOIN",
     "LEFT", "RIGHT", "INNER", "FULL", "CROSS", "ANY", "ALL", "ASOF",
@@ -181,8 +181,8 @@ object ChSqlRewrite {
   }
 
   /** Select-block scoping shared by the alias-sensitive rewrites
-    * (rewriteAnyJoin's composite requalification, rewriteAntiRightCols,
-    * the ASOF lowering, the star expansion): for every token, (a) the id of its
+    * (rewriteAnyJoin's composite requalification, the ASOF lowering,
+    * the star expansion): for every token, (a) the id of its
     * innermost enclosing SELECT block — a same-named alias inside an
     * unrelated subquery must not be rewritten by another block's join —
     * and (b) whether it sits in that block's SELECT list (between
@@ -250,10 +250,7 @@ object ChSqlRewrite {
       .getOrElse(resolver.joinUseNulls)
     toks = normalizeBareUsing(toks, resolver)
     toks = rewriteSemiRightRefs(toks, resolver)
-    // BEFORE the ANTI fill: a `g.*` over an ANTI right side becomes an
-    // explicit column list the literal substitution can reach
     toks = expandQualifiedStars(toks, resolver)
-    toks = rewriteAntiRightCols(toks, resolver, useNulls)
     toks = rewriteAnyJoin(toks)
     toks = rewriteAsofJoin(toks, resolver, useNulls)
     toks = rewritePrewhere(toks)
@@ -2063,156 +2060,6 @@ object ChSqlRewrite {
     rewriteAsofJoin(rebuilt, resolver, useNulls)
   }
 
-  /** ClickHouse lets a query READ right-side columns of an ANTI JOIN:
-    * every surviving row is by definition unmatched, so the columns
-    * hold the type's DEFAULT value (homeworks/hw06.md:137-149 selects
-    * `g.genre` alongside a `left anti join genres g` and renders '').
-    * Spark's native anti join exposes only the left side, so such a
-    * reference fails to resolve. When — and only when — a right-alias-
-    * qualified reference appears OUTSIDE the join condition, substitute
-    * the column's type-default literal (resolver-supplied): the native
-    * LEFT ANTI plan is preserved, and a bare SELECT-list item keeps its
-    * column name via AS. Queries that never read the right side are
-    * untouched. Under `join_use_nulls = 1` the substituted literal is
-    * a typed NULL instead of the type default — the unmatched-side
-    * fill rule follows the setting for ANTI exactly as for outer joins
-    * (found by the r10 join fuzzer: the pre-fix substitution ignored
-    * the setting). The right side may be a catalog table, an aliased
-    * subquery or a CTE: each literal comes from the side's analyzed
-    * schema ([[Resolver.describe]] / [[Resolver.describeQuery]]), typed
-    * by the column and NULL where the column metadata declares it
-    * Nullable — the same declaration the outer-join fill reads.
-    */
-  private def rewriteAntiRightCols(toks: Vector[Token],
-                                   resolver: Resolver,
-                                   useNulls: Boolean): Vector[Token] = {
-    val cteSc = cteScopes(toks)
-    // collect every ANTI join: (alias, right side — a catalog table or
-    // a subquery's inner text (r11) — and the segment span
-    // [ANTI .. end of ON/USING condition))
-    final case class Seg(alias: String, table: Option[String],
-                         subSql: Option[String], from: Int, until: Int) {
-      // analyzed only when a reference actually reads the side
-      lazy val schema: Option[StructType] = table match {
-        case Some(tb) => resolver.resolve(tb).flatMap(rt =>
-          resolver.describe(rt.viewName))
-        case None => subSql.flatMap(resolver.describeQuery)
-      }
-    }
-    val term = joinCondTerm
-    val segs = Vector.newBuilder[Seg]
-    var i = 0
-    while (i < toks.length) {
-      // RIGHT ANTI keeps the RIGHT side's real values — the default
-      // substitution below applies only to LEFT/bare ANTI joins, where
-      // the right side is provably unmatched
-      if (toks(i).is("ANTI") && !(i > 0 && toks(i - 1).is("RIGHT"))) {
-        var j = i + 1
-        while (j < toks.length && (toks(j).is("LEFT") || toks(j).is("RIGHT")))
-          j += 1
-        if (j < toks.length && toks(j).is("JOIN") && j + 1 < toks.length) {
-          // the right side: a plain table (its view's schema), a
-          // subquery (its analyzed schema, r11 — pre-r11 a right-column
-          // read failed to resolve), or a CTE-bound name (r12: a CTE IS
-          // a subquery — probed through the statement's WITH prefix,
-          // never as a same-named catalog table)
-          val isSub = toks(j + 1).text == "("
-          val subClose = if (isSub) matchParen(toks, j + 1) else -1
-          val isCte = !isSub &&
-            cteShadowed(cteSc, stripTicks(toks(j + 1).text), j + 1)
-          val table = if (isSub || isCte) None else Some(toks(j + 1).text)
-          val subSql =
-            if (isSub && subClose > 0)
-              Some(ChLexer.render(toks.slice(j + 2, subClose)))
-            else if (isCte) cteProbe(toks, stripTicks(toks(j + 1).text))
-            else None
-          var k = (if (isSub) subClose else j + 1) + 1
-          val aliasToks = Vector.newBuilder[Token]
-          while (k < toks.length && k > 0 &&
-            !toks(k).is("USING") && !toks(k).is("ON")) {
-            aliasToks += toks(k); k += 1
-          }
-          if (k < toks.length && (table.nonEmpty || subSql.nonEmpty)) {
-            // a FINAL/SAMPLE modifier never names the table (same split
-            // rewriteAnyJoin uses; pre-fix a trailing FINAL was mistaken
-            // for the alias)
-            val region = aliasToks.result()
-            val modAt = region.indexWhere(t => t.is("FINAL") || t.is("SAMPLE"))
-            val aToks = if (modAt < 0) region else region.take(modAt)
-            val alias = aToks.filterNot(_.is("AS")).lastOption
-              .map(_.text)
-              .orElse(table.map(_.split('.').last))
-              // an unaliased CTE side's natural qualifier is the CTE
-              // name itself (table is None there — r12 review find)
-              .orElse(if (isCte) Some(stripTicks(toks(j + 1).text)) else None)
-              .getOrElse("")
-            var e = k + 1
-            var dd = 0
-            var stop = false
-            while (e < toks.length && !stop) {
-              val te = toks(e)
-              if (te.text == "(") dd += 1
-              else if (te.text == ")") { dd -= 1; if (dd < 0) stop = true }
-              else if (dd == 0 && kwAt(toks, e, term)) stop = true
-              if (!stop) e += 1
-            }
-            // an unaliased subquery side has no referenceable qualifier
-            if (alias.nonEmpty) segs += Seg(alias, table, subSql, i, e)
-          }
-        }
-      }
-      i += 1
-    }
-    val sgs = segs.result()
-    if (sgs.isEmpty) return toks
-    val (blockOf, inList) = selectBlockScopes(toks)
-    // the qualifier may be backtick-quoted (`g`.genre) — match and strip
-    // the alias in either spelling, same contract as rewriteAnyJoin's
-    // stripQual
-    def stripQual(alias: String, text: String): Option[String] =
-      if (text.endsWith(".*")) None // a qualified star is not a column ref
-      else if (text.startsWith(alias + ".")) Some(text.stripPrefix(alias + "."))
-      else if (text.startsWith("`" + alias + "`."))
-        Some(text.stripPrefix("`" + alias + "`."))
-      else None
-    val out = Vector.newBuilder[Token]
-    var p = 0
-    while (p < toks.length) {
-      val t = toks(p)
-      val seg = sgs.find(s => t.isIdent && !t.isString &&
-        stripQual(s.alias, t.text).isDefined &&
-        (p < s.from || p >= s.until) && blockOf(p) == blockOf(s.from))
-      // the schema lookup also validates the column exists; only the
-      // literal itself switches with the setting. A NULL is a TYPED
-      // null, CAST(NULL AS T) — a bare NULL would give the output
-      // column VOID type, which parquet writers (and schema compares)
-      // reject.
-      seg.flatMap { s =>
-        // the column part may be backtick-quoted (`g`.`genre`, and the
-        // r13 star expansion emits ticked refs) — the lookup wants the
-        // bare name
-        val c = stripTicks(stripQual(s.alias, t.text).get)
-        s.schema.flatMap(_.fields.find(_.name.equalsIgnoreCase(c)))
-          .map(f => ChTypes.defaultLiteralSql(f.dataType,
-            useNulls || ChTypes.declaredNullable(f.metadata)))
-      } match {
-        case Some(lit0) =>
-          val colName = t.text.substring(t.text.indexOf('.') + 1)
-          // bare SELECT-list item (SELECT …, g.genre, … FROM): keep the
-          // column's name on the substituted literal
-          val bare = inList(p) && p > 0 && p + 1 < toks.length &&
-            (toks(p - 1).text == "," || toks(p - 1).is("SELECT") ||
-              toks(p - 1).is("DISTINCT")) &&
-            (toks(p + 1).text == "," || toks(p + 1).is("FROM"))
-          out ++= ChLexer.tokenize(lit0)
-          if (bare) { out += Token("AS") += Token(colName); () }
-        case None => out += t
-      }
-      p += 1
-    }
-    out.result()
-  }
-
   /** SQL word-forms that pass [[Token.isIdent]] but can never be a bare
     * column reference or alias (a backtick-quoted spelling IS a real
     * identifier and is exempted at the check site).
@@ -2436,26 +2283,21 @@ object ChSqlRewrite {
   /** Expands a SELECT-list qualified star `a.*` (optionally with an
     * `EXCEPT (cols)` tail) into the explicit `a.c1, a.c2, …` column
     * list of the plain CATALOG TABLE that `a` names or aliases in the
-    * same block's FROM region. Runs only in blocks with an ANTI or
-    * ASOF join: the expansion is semantically the projection Spark
-    * would produce anyway, but it lets the ANTI right-column
-    * substitution reach each reference individually (pre-expansion a
-    * `SELECT g.*` over an ANTI right side did not resolve at all), and
-    * the ASOF lowering requalify each side's columns one by one (a
-    * star over its flattened `__asof` subquery would read both sides).
-    * A bare `*` expands only in ANTI blocks. Subquery/CTE aliases are
-    * left alone, as are MergeTree virtual columns (ClickHouse hides
-    * them from stars).
+    * same block's FROM region. Runs only in blocks with an ASOF join:
+    * the expansion is semantically the projection Spark would produce
+    * anyway, but it lets the ASOF lowering requalify each side's
+    * columns one by one (a star over its flattened `__asof` subquery
+    * would read both sides). Subquery/CTE aliases are left alone, as
+    * are MergeTree virtual columns (ClickHouse hides them from stars).
     */
   private def expandQualifiedStars(toks: Vector[Token],
                                    resolver: Resolver): Vector[Token] = {
-    if (!toks.exists(t => !t.isString &&
-      (t.text == "*" || (t.isIdent && t.text.endsWith(".*"))))) return toks
-    if (!toks.exists(t => !t.isString && (t.is("ANTI") || t.is("ASOF"))))
+    if (!toks.exists(t => !t.isString && t.isIdent && t.text.endsWith(".*")))
       return toks
+    if (!toks.exists(t => !t.isString && t.is("ASOF"))) return toks
     val (blockOf, inList) = selectBlockScopes(toks)
     val starBlocks = toks.indices.collect {
-      case i if toks(i).is("ANTI") || toks(i).is("ASOF") => blockOf(i)
+      case i if toks(i).is("ASOF") => blockOf(i)
     }.toSet
     val cte = cteScopes(toks)
     // (block, qualifier) → catalog table, from `FROM/JOIN table
@@ -2485,93 +2327,7 @@ object ChSqlRewrite {
       }
       q += 1
     }
-    // per-block ORDERED component inventory for BARE-star expansion:
-    // Some(aliases in FROM order) only when every component is a plain
-    // resolvable catalog table, all joins use ON (USING merges key
-    // columns — different star shape), and the block has an ANTI join
-    // (whose right-side fill needs explicit refs). SEMI (ClickHouse
-    // shows right columns, Spark cannot) and ASOF (its lowering
-    // reshapes the FROM) blocks skip, conservative.
-    val blockComps = scala.collection.mutable
-      .Map.empty[Int, Option[Vector[(String, String)]]]
-    def walkBlock(fromIdx: Int): Option[Vector[(String, String)]] = {
-      val b = blockOf(fromIdx)
-      val comps = Vector.newBuilder[(String, String)]
-      var p = fromIdx + 1
-      var anti = false
-      def finish(): Option[Vector[(String, String)]] =
-        if (anti) Some(comps.result()) else None
-      while (p < toks.length && blockOf(p) == b) {
-        // component
-        if (toks(p).text == "(") return None // subquery side
-        val t0 = toks(p)
-        if (!t0.isIdent || t0.isString ||
-          cteShadowed(cte, strip(t0.text), p) ||
-          resolver.resolve(strip(t0.text)).isEmpty) return None
-        val table = strip(t0.text)
-        p += 1
-        var alias = table.split('.').last.toLowerCase
-        if (p < toks.length && toks(p).is("AS")) p += 1
-        if (p < toks.length && toks(p).isIdent && !toks(p).isString &&
-          !fromClauseEnd(toks(p)) && !joinFamily(toks(p)) &&
-          !toks(p).is("ON") && !toks(p).is("USING") &&
-          !toks(p).is("FINAL") && !sqlWordLike(toks(p).upper)) {
-          alias = stripTicks(toks(p).text).toLowerCase; p += 1
-        }
-        while (p < toks.length && toks(p).is("FINAL")) p += 1
-        if (p < toks.length && toks(p).is("SAMPLE")) return None
-        comps += ((alias, table))
-        // ON condition span
-        if (p < toks.length && toks(p).is("USING")) return None
-        if (p < toks.length && toks(p).is("ON")) {
-          var dd = 0
-          var stop = false
-          p += 1
-          while (p < toks.length && !stop) {
-            val te = toks(p)
-            if (te.text == "(") dd += 1
-            else if (te.text == ")") { dd -= 1; if (dd < 0) stop = true }
-            else if (dd == 0 && kwAt(toks, p, joinCondTerm)) stop = true
-            if (!stop) p += 1
-          }
-        }
-        // separator: comma / join-keyword run / clause end
-        if (p >= toks.length || blockOf(p) != b) return finish()
-        val t = toks(p)
-        if (t.text == ",") p += 1
-        else if (!t.isString && (t.text == ")" || t.text == ";" ||
-          clauseStarters(t.upper))) return finish()
-        else {
-          var sawJoin = false
-          var bad = false
-          while (p < toks.length && !sawJoin && !bad) {
-            val tj = toks(p)
-            if (tj.is("JOIN")) { sawJoin = true; p += 1 }
-            else if (tj.is("SEMI") || tj.is("ASOF") || tj.is("PASTE") ||
-              tj.is("ARRAY") || tj.is("LATERAL")) bad = true
-            else if (tj.is("ANTI")) { anti = true; p += 1 }
-            else if (tj.is("LEFT") || tj.is("RIGHT") || tj.is("FULL") ||
-              tj.is("INNER") || tj.is("CROSS") || tj.is("ANY") ||
-              tj.is("ALL") || tj.is("OUTER") || tj.is("GLOBAL")) p += 1
-            else bad = true
-          }
-          if (bad || !sawJoin) return None
-        }
-      }
-      finish()
-    }
-    locally {
-      var k = 0
-      while (k < toks.length) {
-        if (toks(k).is("FROM") && !toks(k).isString) {
-          val b = blockOf(k)
-          if (!blockComps.contains(b)) blockComps(b) = walkBlock(k)
-        }
-        k += 1
-      }
-    }
-    if (comp.isEmpty && !blockComps.valuesIterator.exists(_.isDefined))
-      return toks
+    if (comp.isEmpty) return toks
     // paren depth per token + each block's select-list depth: only a
     // TOP-LEVEL list item expands (a star inside a call like
     // `count(a.*)` must stay one argument)
@@ -2608,17 +2364,6 @@ object ChSqlRewrite {
         comp.get((blockOf(p), qual))
           .flatMap(colsOf)
           .map(cols => cols.map(c => (qual, c)))
-      } else if (t.text == "*" && !t.isString && topLevel &&
-        // a bare star expands only in the inventoried blocks (every
-        // component a plain catalog table, ON joins, an ANTI join
-        // present) — the per-component lists concatenate in FROM
-        // order, which is both Spark's and ClickHouse's star shape
-        blockComps.get(blockOf(p)).exists(_.isDefined)) {
-        val comps = blockComps(blockOf(p)).get
-        val lists = comps.map { case (a, tb) =>
-          colsOf(tb).map(cols => cols.map(c => (a, c)))
-        }
-        if (lists.exists(_.isEmpty)) None else Some(lists.flatMap(_.get))
       } else None
       hit match {
         case Some(cols0) =>
@@ -2932,9 +2677,10 @@ object ChSqlRewrite {
     * name). None when the name is not bound there (e.g. a WITH nested
     * inside a subquery) — callers then treat the side as unknown-schema
     * and skip conservatively, NEVER as the same-named catalog table.
-    * Powers the ANTI and ASOF LEFT fills for CTE join sides: a CTE
-    * is a subquery, so misses fill the defaults of its analyzed output
-    * schema ([[Resolver.describeQuery]]).
+    * Powers the ASOF lowering and the LEFT SEMI right-read check for
+    * CTE join sides: a CTE is a subquery, so its columns (and an ASOF
+    * LEFT miss's defaults) come from its analyzed output schema
+    * ([[Resolver.describeQuery]]).
     */
   private def cteProbe(toks: Vector[Token], name: String): Option[String] = {
     if (toks.isEmpty || !toks.head.is("WITH")) return None
@@ -2964,17 +2710,20 @@ object ChSqlRewrite {
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
-      val isRef = (t.is("FROM") || t.is("JOIN")) && i + 1 < toks.length &&
-        toks(i + 1).isIdent &&
-        // an ident followed by "(" is a CALL (range(3) from the
-        // numbers() lowering, a leftover table function), never a
-        // table ref — substituting it strands the argument list
-        !(i + 2 < toks.length && toks(i + 2).text == "(") &&
-        !cteShadowed(cte, strip(toks(i + 1).text), i + 1) &&
-        resolver.resolve(strip(toks(i + 1).text)).isDefined
-      if (isRef) {
+      // resolved once: each resolve registers the table's views
+      val resolved =
+        if ((t.is("FROM") || t.is("JOIN")) && i + 1 < toks.length &&
+          toks(i + 1).isIdent &&
+          // an ident followed by "(" is a CALL (range(3) from the
+          // numbers() lowering, a leftover table function), never a
+          // table ref — substituting it strands the argument list
+          !(i + 2 < toks.length && toks(i + 2).text == "(") &&
+          !cteShadowed(cte, strip(toks(i + 1).text), i + 1))
+          resolver.resolve(strip(toks(i + 1).text))
+        else None
+      if (resolved.isDefined) {
         val ident = strip(toks(i + 1).text)
-        val rt = resolver.resolve(ident).get
+        val rt = resolved.get
         // optional alias tokens before FINAL/SAMPLE
         var j = i + 2
         var useFinal = false
@@ -3053,15 +2802,19 @@ object ChSqlRewrite {
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
-      if (t.is("IN") && i + 1 < toks.length && toks(i + 1).isIdent &&
-        (i + 2 >= toks.length || toks(i + 2).text != "(") &&
-        !cteShadowed(cte, strip(toks(i + 1).text), i + 1) &&
-        resolver.resolve(strip(toks(i + 1).text)).isDefined) {
-        val view = resolver.resolve(strip(toks(i + 1).text)).get.viewName
-        out += t
-        out ++= ChLexer.tokenize(s"(SELECT * FROM $view)")
-        i += 2
-      } else { out += t; i += 1 }
+      val resolved =
+        if (t.is("IN") && i + 1 < toks.length && toks(i + 1).isIdent &&
+          (i + 2 >= toks.length || toks(i + 2).text != "(") &&
+          !cteShadowed(cte, strip(toks(i + 1).text), i + 1))
+          resolver.resolve(strip(toks(i + 1).text))
+        else None
+      resolved match {
+        case Some(rt) =>
+          out += t
+          out ++= ChLexer.tokenize(s"(SELECT * FROM ${rt.viewName})")
+          i += 2
+        case None => out += t; i += 1
+      }
     }
     out.result()
   }

@@ -156,9 +156,10 @@ object ChTypes {
   def defaultColumn(dt: DataType, nullable: Boolean = false): Column =
     GraftSqlBridge.column(defaultValue(dt, nullable))
 
-  /** [[defaultValue]] as SQL text of type `dt` (the dialect rewriter
-    * splices it into statements). A Tuple renders element-wise: field
-    * names become SQL string literals with embedded quotes escaped.
+  /** [[defaultValue]] as SQL text of type `dt` (the ASOF lowering
+    * splices it into an unmatched row's columns). A Tuple renders
+    * element-wise: field names become SQL string literals with embedded
+    * quotes escaped.
     */
   def defaultLiteralSql(dt: DataType, nullable: Boolean = false): String = {
     val v = defaultValue(dt, nullable)

@@ -2016,11 +2016,51 @@ class ChSqlSpec extends SparkSpec {
     assert(rows.forall(_.getString(2) == ""), "right column must read ''")
     assert(rows.head.schema.fieldNames.toSeq == Seq("name", "year", "genre"),
       "the substituted literal keeps the column's name")
-    // a query that never reads the right side stays on the native path
-    val n = s.sql(
+    // an unqualified right column resolves and reads the default too
+    val uq = s.sql(
+      """SELECT name, genre FROM mvx m LEFT ANTI JOIN gex g ON m.id = g.movie_id
+        |ORDER BY name""".stripMargin).collect()
+    assert(uq.map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("m2", ""), ("m3", "")), "unqualified genre must read ''")
+    // `g.*` over a subquery side expands to its columns' defaults
+    val sub = s.sql(
+      """SELECT m.name, g.* FROM mvx m
+        |LEFT ANTI JOIN (SELECT movie_id, genre FROM gex) g ON m.id = g.movie_id
+        |ORDER BY m.name""".stripMargin).collect()
+    assert(sub.head.schema.fieldNames.toSeq == Seq("name", "movie_id", "genre"))
+    assert(sub.map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq ==
+      Seq(("m2", 0L, ""), ("m3", 0L, "")), "g.* must read 0 and ''")
+    // a bare `*` under USING reads the merged key, the left and the
+    // right columns, the right ones as defaults
+    s.execute(
+      """CREATE TABLE ul (k UInt32, a String) ENGINE = Memory;
+        |CREATE TABLE ur (k UInt32, b String) ENGINE = Memory;
+        |INSERT INTO ul VALUES (1, 'x'), (2, 'y');
+        |INSERT INTO ur VALUES (1, 'q');""".stripMargin)
+    val us = s.sql("SELECT * FROM ul l LEFT ANTI JOIN ur r USING (k)").collect()
+    assert(us.head.schema.fieldNames.toSeq == Seq("k", "a", "b"))
+    assert(us.map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq((2L, "y", "")), "USING star must read b = ''")
+    // an unqualified name both sides have stays the left side's (in the
+    // select list, WHERE and ORDER BY); qualified, the right one reads 0
+    val sh = s.sql(
+      """SELECT k, r.k AS rk FROM ul l LEFT ANTI JOIN ur r ON l.k = r.k
+        |WHERE k > 0 ORDER BY k""".stripMargin).collect()
+    assert(sh.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((2L, 0L)),
+      "unqualified k must read the left side")
+    val self = s.sql(
+      "SELECT k FROM ul x LEFT ANTI JOIN ul y ON x.k = y.k + 1 ORDER BY k")
+      .collect()
+    assert(self.map(_.getLong(0)).toSeq == Seq(1L), "self-anti k is x.k")
+    // a query that never reads the right side stays on the native path:
+    // its optimized plan is Spark's anti join, never a LEFT join
+    val cnt = s.sql(
       "SELECT count() AS c FROM mvx m LEFT ANTI JOIN gex g ON m.id = g.movie_id")
-      .collect().head.getLong(0)
-    assert(n == 2L)
+    assert(cnt.collect().head.getLong(0) == 2L)
+    import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val joins = cnt.queryExecution.optimizedPlan.collect { case j: Join => j.joinType }
+    assert(joins.contains(LeftAnti) && !joins.contains(LeftOuter), joins)
     // a numeric right column reads 0, inside an expression too
     val v = s.sql(
       """SELECT m.name, g.movie_id + 100 AS shifted
@@ -2050,11 +2090,6 @@ class ChSqlSpec extends SparkSpec {
       alwaysEmpty)
     assert(r.sql.contains("g.genre"),
       s"RIGHT ANTI must not substitute the kept side's columns: ${r.sql}")
-    val rl = graft.chsql.ChSqlRewrite.rewrite(
-      "SELECT g.genre FROM mvx m LEFT ANTI JOIN gex g ON m.id = g.movie_id",
-      alwaysEmpty)
-    assert(!rl.sql.contains("g.genre"),
-      s"LEFT ANTI must substitute the right side's columns: ${rl.sql}")
   }
 
   test("join_use_nulls = 0 (ClickHouse default): unmatched LEFT JOIN " +
