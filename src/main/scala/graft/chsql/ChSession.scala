@@ -1376,10 +1376,10 @@ final class ChSession(val spark: SparkSession,
   }
 
   /** `t`'s view with its Nullable(T) columns marked in the column
-    * metadata ([[ChTypes.NullableKey]]): the outer-join fill, ANTI
-    * right-side reads (both [[ChJoinDefaults.select]]) and ASOF LEFT
-    * misses keep their NULLs. A table without Nullable columns reads
-    * as is.
+    * metadata ([[ChTypes.NullableKey]]): the outer-join fill (ASOF LEFT
+    * misses included) and ANTI right-side reads, all in
+    * [[ChJoinDefaults.select]], keep their NULLs. A table without
+    * Nullable columns reads as is.
     */
   private def declared(t: ChTable, df: DataFrame): DataFrame = {
     val nullable = t.columns.filter(_.nullable).map(_.name.toLowerCase).toSet
@@ -1409,7 +1409,15 @@ final class ChSession(val spark: SparkSession,
           .stripSuffix("`"))
     }
     val resolver = new ChSqlRewrite.Resolver {
-      def resolve(ident: String): Option[ChSqlRewrite.ResolvedTable] = {
+      // the rewriter asks for a name from several passes: each table's
+      // views register once per statement (statement-local, like
+      // subDfCache, so a later DDL never reads a stale view)
+      private val resolved =
+        mutable.Map.empty[String, Option[ChSqlRewrite.ResolvedTable]]
+      def resolve(ident: String): Option[ChSqlRewrite.ResolvedTable] =
+        resolved.getOrElseUpdate(ident, register(ident))
+
+      private def register(ident: String): Option[ChSqlRewrite.ResolvedTable] = {
         if (ident.toLowerCase.startsWith("system.")) {
           val sys = systemTable(ident.toLowerCase.stripPrefix("system."))
           // a miss falls through: the reference also creates USER tables
@@ -1471,9 +1479,9 @@ final class ChSession(val spark: SparkSession,
         enumValuesOf(ident, column)
 
       // ONE analysis round-trip per distinct subquery text per
-      // statement (the ASOF and LEFT SEMI passes may each probe the
-      // same side); per-statement scope, so a later DDL can never serve
-      // a stale schema
+      // statement (the LEFT SEMI right read, the last prober of a
+      // subquery or CTE side); per-statement scope, so a later DDL can
+      // never serve a stale schema
       private val subDfCache = mutable.Map
         .empty[String, Option[org.apache.spark.sql.DataFrame]]
       private def subDf(sql: String): Option[org.apache.spark.sql.DataFrame] =

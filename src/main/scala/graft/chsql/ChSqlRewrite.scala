@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.StructType
   * (dropped). ClickHouse function NAMES need no rewriting — the whole
   * dialect is injected into every session by
   * [[graft.plans.GraftExtensions]]. The outer-join default fill
-  * (`join_use_nulls = 0`) and ANTI joins' right-side reads are not text
-  * rewrites: the caller runs [[graft.plans.ChJoinDefaults.select]] over
-  * the parsed and analyzed plan.
+  * (`join_use_nulls = 0`), ANTI joins' right-side reads and ASOF joins
+  * are not text rewrites: the caller runs
+  * [[graft.plans.ChJoinDefaults.select]] over the parsed and analyzed
+  * plan (ASOF needs only a parse-time mark, [[markAsofJoins]]).
   */
 object ChSqlRewrite {
 
@@ -49,9 +50,7 @@ object ChSqlRewrite {
 
     /** Schema of an already-resolved view — its column names power the
       * `COLUMNS('regex')` dynamic-projection macro (lecture_04/08) and
-      * the ASOF lowering's catalog sides; its types and declared
-      * nullability ([[ChTypes.NullableKey]]) give the type defaults an
-      * unmatched ASOF LEFT catalog side reads.
+      * the LEFT SEMI right-read check on a catalog side.
       */
     def describe(viewName: String): Option[StructType] = None
 
@@ -65,10 +64,7 @@ object ChSqlRewrite {
 
     /** Analyzed output schema of an arbitrary dialect SELECT (analysis
       * only, no execution) — what [[describe]] is for a SUBQUERY or CTE
-      * side (the ASOF lowering, LEFT SEMI, and the ASOF LEFT defaults),
-      * where no catalog entry exists. Plain references keep
-      * their declared nullability in the column metadata; computed
-      * columns carry none and read their result type's zero value.
+      * side of a LEFT SEMI right read, where no catalog entry exists.
       */
     def describeQuery(sql: String): Option[StructType] = None
 
@@ -107,7 +103,7 @@ object ChSqlRewrite {
 
   /** Keywords that end a join's ON/USING condition span at depth 0 —
     * ONE set shared by every pass that scans a join condition
-    * (rewriteAnyJoin, the ASOF lowering, rewriteSemiRightRefs), so
+    * (rewriteAnyJoin, rewriteSemiRightRefs), so
     * clause coverage cannot drift between them.
     */
   private val joinCondTerm = clauseStarters ++ Set("PREWHERE", "JOIN",
@@ -138,7 +134,7 @@ object ChSqlRewrite {
     * must requalify onto its auto-alias. Every component is
     * `ref [FINAL|SAMPLE …] [AS] [alias]`; a subquery component
     * REQUIRES an alias (there is no name to derive one from). Shared
-    * by the ANY RIGHT and ASOF composite paths.
+    * by the ANY RIGHT composite path.
     */
   private def joinTreeComponentAliases(seg: Vector[Token],
                                        joinName: String): Vector[String] = {
@@ -181,8 +177,8 @@ object ChSqlRewrite {
   }
 
   /** Select-block scoping shared by the alias-sensitive rewrites
-    * (rewriteAnyJoin's composite requalification, the ASOF lowering,
-    * the star expansion): for every token, (a) the id of its
+    * (rewriteAnyJoin's composite requalification, the ASOF mark, the
+    * LEFT SEMI right read): for every token, (a) the id of its
     * innermost enclosing SELECT block — a same-named alias inside an
     * unrelated subquery must not be rewritten by another block's join —
     * and (b) whether it sits in that block's SELECT list (between
@@ -250,9 +246,8 @@ object ChSqlRewrite {
       .getOrElse(resolver.joinUseNulls)
     toks = normalizeBareUsing(toks, resolver)
     toks = rewriteSemiRightRefs(toks, resolver)
-    toks = expandQualifiedStars(toks, resolver)
     toks = rewriteAnyJoin(toks)
-    toks = rewriteAsofJoin(toks, resolver, useNulls)
+    toks = markAsofJoins(toks)
     toks = rewritePrewhere(toks)
     toks = rewriteWithTotals(toks)
     val (afterFill, fill) = extractWithFill(toks)
@@ -1691,373 +1686,43 @@ object ChSqlRewrite {
     rewriteAnyJoin(rebuild(keys)) // handle further ANY joins
   }
 
-  /** `ASOF [LEFT] JOIN` in SQL text (lectures/lecture_10.md:14) → the
-    * union-and-carry-forward window formulation — the SAME one-shuffle,
-    * no-candidate-explosion plan as [[graft.operators.Joins.asofLeft]]
-    * (the native `AsOfJoinExec` stays the library-level scale path):
-    * tag both sides, UNION ALL, one window partitioned by the equi keys
-    * ordered by (time, side), `last(payload, ignoreNulls)` carries the
-    * latest (or, forward modes, next) right payload onto each left row.
-    *
-    * ON form: every conjunct is either an equi key (`l.k = r.k`, plain
-    * columns) or THE one time inequality — either orientation, all four
-    * modes (>=, >, <=, <). USING form: the LAST column is the time
-    * (the ClickHouse contract), inclusive-backward. The join flattens
-    * through an auto-aliased subquery (`__asof`): left columns keep
-    * their names, right columns keep theirs unless they collide with a
-    * left name (then `__r_<name>`); alias-qualified outer references
-    * requalify onto the flattened names (same-block discipline, bare
-    * SELECT items keep their user-visible name via AS). Sides may be
-    * catalog tables (column lists from the catalog), aliased
-    * SUBQUERIES (column lists via [[Resolver.describeQuery]]), or — on
-    * the left — a composite join TREE, which flattens through an
-    * auto-aliased `(SELECT * FROM tree) __asofl` subquery exactly like
-    * the ANY RIGHT composite path (r11; pre-r11 both were refused).
-    * Under `join_use_nulls = 0` an ASOF LEFT miss reads the right
-    * side's type defaults, filled inside the lowering (it leaves no
-    * Join node for [[graft.plans.ChJoinDefaults]]).
+  /** `ASOF [LEFT] JOIN` and `LEFT ASOF JOIN` (lectures/lecture_10.md:14)
+    * run on the native operator, [[graft.plans.AsOfJoinPlan]]. The ASOF
+    * token is dropped, so the join parses as the LEFT or INNER join it
+    * wraps, and a `/*+ GRAFT_ASOF(n, …) */` hint on its block's SELECT
+    * gives each ASOF join's position among the block's FROM joins (1 =
+    * the first JOIN). [[graft.plans.ChJoinDefaults.select]] consumes the
+    * hint, analyzes the join as the plain one and restores the operator.
     */
-  private def rewriteAsofJoin(toks: Vector[Token],
-                              resolver: Resolver,
-                              useNulls: Boolean): Vector[Token] = {
-    // first ASOF heading a join: `ASOF [LEFT] JOIN` (canonical CH
-    // order) or the `LEFT ASOF JOIN` spelling
-    var i = -1
-    var scan = 0
-    while (i < 0) {
-      val c = toks.indexWhere(_.is("ASOF"), scan)
-      if (c < 0) return toks
-      var j0 = c + 1
-      while (j0 < toks.length && toks(j0).is("LEFT")) j0 += 1
-      if (j0 < toks.length && toks(j0).is("JOIN")) i = c else scan = c + 1
-    }
-    def bad(msg: String) =
-      throw new IllegalArgumentException(s"ASOF JOIN: $msg")
-    val isLeftJoin = (i > 0 && toks(i - 1).is("LEFT")) ||
-      (i + 1 < toks.length && toks(i + 1).is("LEFT"))
-    var j = i + 1
-    while (j < toks.length && !toks(j).is("JOIN")) j += 1
-    val t0 = j + 1
-    if (t0 >= toks.length) bad("missing right side")
-    // right side: a catalog table or a parenthesized subquery (r11 —
-    // the lowering derives a subquery side's column list through the
-    // resolver's analysis hook instead of refusing)
-    val (rightRef, rightInner, refEnd) =
-      if (toks(t0).text == "(") {
-        val close = matchParen(toks, t0)
-        if (close < 0) bad("unbalanced subquery right side")
-        (ChLexer.render(toks.slice(t0, close + 1)),
-          Some(ChLexer.render(toks.slice(t0 + 1, close))), close)
-      } else (toks(t0).text, None, t0)
-    var k = refEnd + 1
-    val rRegion = Vector.newBuilder[Token]
-    while (k < toks.length && !toks(k).is("ON") && !toks(k).is("USING")) {
-      rRegion += toks(k); k += 1
-    }
-    if (k >= toks.length) bad("missing ON/USING condition")
-    def aliasAndMods(region: Vector[Token], fallback: String)
-        : (String, String) = {
-      val mAt = region.indexWhere(t => t.is("FINAL") || t.is("SAMPLE"))
-      val (aToks, mToks) =
-        if (mAt < 0) (region, Vector.empty[Token])
-        else (region.take(mAt), region.drop(mAt))
-      val alias = aToks.filterNot(_.is("AS")).lastOption
-        .map(t => stripTicks(t.text)).getOrElse(fallback)
-      (alias, if (mToks.isEmpty) "" else " " + ChLexer.render(mToks))
-    }
-    val (rightAlias, rightMods) = aliasAndMods(rRegion.result(),
-      if (rightInner.isEmpty) rightRef else "")
-    if (rightAlias.isEmpty) bad("a subquery right side requires an alias")
-    // left side: the tokens between the clause's FROM and the join
-    // head (the ASOF token, or a LEFT before it) — a single table ref,
-    // a single aliased subquery, or a composite join TREE
-    val head0 = if (i > 0 && toks(i - 1).is("LEFT")) i - 1 else i
-    var fromIdx = -1
+  private def markAsofJoins(toks: Vector[Token]): Vector[Token] = {
+    if (!toks.exists(_.is("ASOF"))) return toks
+    val blockOf = selectBlockScopes(toks)._1
+    val select = scala.collection.mutable.Map.empty[Int, (Int, Int)]
+    val joins = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+    val marks = scala.collection.mutable.Map.empty[Int, Vector[Int]]
+    val dropped = scala.collection.mutable.Set.empty[Int]
     var depth = 0
-    var p = head0 - 1
-    while (fromIdx < 0 && p >= 0) {
-      val tx = toks(p).text
-      if (tx == ")") depth += 1
-      else if (tx == "(") { depth -= 1; if (depth < 0) p = 0 }
-      else if (depth == 0 && toks(p).is("FROM")) fromIdx = p
-      p -= 1
-    }
-    if (fromIdx < 0 || fromIdx + 1 >= head0) bad("could not find the left side")
-    val seg = toks.slice(fromIdx + 1, head0)
-    // composite left TREE: flatten through an auto-aliased subquery
-    // (the same discipline as the ANY RIGHT composite path) and
-    // recurse — the flattened stream then parses as a single subquery
-    // left side. Same contract: a tree column present on two inner
-    // tables surfaces Spark's own ambiguity error after SELECT * —
-    // spell the inner join with USING, which coalesces the key.
-    val hasTopJoin = {
-      var dd = 0; var has = false; var x = 0
-      while (x < seg.length) {
-        if (seg(x).text == "(") dd += 1
-        else if (seg(x).text == ")") dd -= 1
-        else if (dd == 0 && seg(x).is("JOIN")) has = true
-        x += 1
-      }
-      has
-    }
-    if (hasTopJoin) {
-      val comps = joinTreeComponentAliases(seg, "ASOF JOIN")
-      if (comps.isEmpty) bad("could not parse the composite left side")
-      val blockIds = selectBlockScopes(toks)._1
-      def requalC(ts: Vector[Token], offset: Int): Vector[Token] =
-        ts.zipWithIndex.map { case (t2, ix) =>
-          if (t2.isIdent && !t2.isString &&
-            blockIds(offset + ix) == blockIds(i))
-            comps.iterator.map { a =>
-              if (t2.text.startsWith(a + "."))
-                Some(t2.text.stripPrefix(a + "."))
-              else if (t2.text.startsWith("`" + a + "`."))
-                Some(t2.text.stripPrefix("`" + a + "`."))
-              else None
-            }.collectFirst { case Some(c) => c }
-              .map(c => t2.copy(text = "__asofl." + c))
-              .getOrElse(t2)
-          else t2
-        }
-      val rebuilt = requalC(toks.take(fromIdx + 1), 0) ++
-        ChLexer.tokenize("(SELECT * FROM " + ChLexer.render(seg) +
-          ") AS __asofl") ++
-        requalC(toks.slice(head0, toks.length), head0)
-      return rewriteAsofJoin(rebuilt, resolver, useNulls)
-    }
-    val (leftRef, leftInner, leftTail) =
-      if (seg.head.text == "(") {
-        val close = matchParen(seg, 0)
-        if (close < 0 || close >= seg.length)
-          bad("unbalanced subquery left side")
-        (ChLexer.render(seg.take(close + 1)),
-          Some(ChLexer.render(seg.slice(1, close))), seg.drop(close + 1))
-      } else (seg.head.text, None, seg.drop(1))
-    val (leftAlias, leftMods) = aliasAndMods(leftTail,
-      if (leftInner.isEmpty) leftRef else "")
-    if (leftAlias.isEmpty) bad("a subquery left side requires an alias")
-    val cteSc = cteScopes(toks)
-    def schemaOf(ref: String, inner: Option[String],
-                 pos: Int): StructType =
-      inner match {
-        case Some(sql) => resolver.describeQuery(sql)
-          .getOrElse(bad("could not derive the subquery side's column " +
-            s"list: $sql"))
-        case None if cteShadowed(cteSc, stripTicks(ref), pos) =>
-          // a CTE-bound side (r12): columns from the CTE's own output,
-          // never from a same-named catalog table; scope-aware, so a
-          // reference inside the CTE's OWN body keeps reading the
-          // catalog (review find — the unscoped form recursed into the
-          // depth guard and errored on a valid self-named body)
-          cteProbe(toks, stripTicks(ref))
-            .flatMap(resolver.describeQuery)
-            .getOrElse(bad(s"could not derive CTE '$ref''s column list"))
-        case None => resolver.resolve(ref)
-          .flatMap(rt => resolver.describe(rt.viewName))
-          .getOrElse(bad(s"table '$ref' has no catalog schema - the " +
-            "lowering needs its column list"))
-      }
-    val leftCols = schemaOf(leftRef, leftInner, fromIdx + 1).fieldNames.toSeq
-    val rightSchema = schemaOf(rightRef, rightInner, t0)
-    val rightCols = rightSchema.fieldNames.toSeq
-    // join_use_nulls = 0: an ASOF LEFT miss reads the right side's type
-    // defaults (NULL where declared Nullable) — the lowering leaves no
-    // Join node for ChJoinDefaults
-    val rightDefaults: Map[String, String] =
-      if (!isLeftJoin || useNulls) Map.empty
-      else rightSchema.fields.map(f => f.name -> ChTypes.defaultLiteralSql(
-        f.dataType, ChTypes.declaredNullable(f.metadata))).toMap
-    // ---- condition: equi keys + the one time inequality
-    var keys = Vector.empty[(String, String)] // (left col, right col)
-    var timePair: Option[(String, String, String)] = None // lcol, rcol, op
-    var e = -1 // first token AFTER the condition
-    if (toks(k).is("USING")) {
-      val (cols, after) = usingList(toks, k)
-      if (cols.length < 2)
-        bad("USING needs at least one key plus the time column")
-      keys = cols.init.map(c => (c, c)).toVector
-      timePair = Some((cols.last, cols.last, ">="))
-      e = after
-    } else {
-      val term = joinCondTerm
-      var e0 = k + 1
-      var d = 0
-      while (e0 < toks.length && !(d == 0 &&
-        (kwAt(toks, e0, term) ||
-          toks(e0).text == ")" || toks(e0).text == ";"))) {
-        if (toks(e0).text == "(") d += 1
-        else if (toks(e0).text == ")") d -= 1
-        e0 += 1
-      }
-      e = e0
-      val onToks = toks.slice(k + 1, e)
-      val conjuncts = {
-        val out = Vector.newBuilder[Vector[Token]]
-        var cur = Vector.newBuilder[Token]
-        var dd = 0
-        onToks.foreach { t =>
-          if (t.text == "(") dd += 1
-          else if (t.text == ")") dd -= 1
-          if (dd == 0 && t.is("AND")) { out += cur.result(); cur = Vector.newBuilder }
-          else cur += t
-        }
-        out += cur.result()
-        out.result()
-      }
-      def sideCol(ts: Vector[Token]): Option[(Boolean, String)] =
-        ts match {
-          case Vector(t) if t.isIdent && !t.isString =>
-            def strip(a: String): Option[String] =
-              if (t.text.startsWith(a + ".")) Some(t.text.stripPrefix(a + "."))
-              else if (t.text.startsWith("`" + a + "`."))
-                Some(t.text.stripPrefix("`" + a + "`."))
-              else None
-            strip(leftAlias).map(c => (true, stripTicks(c)))
-              .orElse(strip(rightAlias).map(c => (false, stripTicks(c))))
-          case _ => None
-        }
-      val cmpOps = Set("=", "==", ">=", ">", "<=", "<")
-      conjuncts.foreach { c0 =>
-        // strip redundant whole-conjunct parens
-        var c = c0
-        while (c.length >= 2 && c.head.text == "(" &&
-          matchParen(c, 0) == c.length - 1) c = c.slice(1, c.length - 1)
-        var dd = 0
-        var opAt = -1
-        var x = 0
-        while (x < c.length && opAt < 0) {
-          val t = c(x)
-          if (t.text == "(") dd += 1
-          else if (t.text == ")") dd -= 1
-          else if (dd == 0 && !t.isString && cmpOps(t.text)) opAt = x
-          x += 1
-        }
-        if (opAt < 0) bad(s"unsupported conjunct: ${ChLexer.render(c)}")
-        val op = c(opAt).text
-        (sideCol(c.take(opAt)), sideCol(c.drop(opAt + 1))) match {
-          case (Some((true, lc)), Some((false, rc))) =>
-            if (op == "=" || op == "==") keys = keys :+ ((lc, rc))
-            else if (timePair.nonEmpty) bad("more than one time inequality")
-            else timePair = Some((lc, rc, op))
-          case (Some((false, rc)), Some((true, lc))) =>
-            if (op == "=" || op == "==") keys = keys :+ ((lc, rc))
-            else if (timePair.nonEmpty) bad("more than one time inequality")
-            else timePair = Some((lc, rc, op match {
-              case ">=" => "<="
-              case ">" => "<"
-              case "<=" => ">="
-              case _ => ">"
-            }))
-          case _ => bad("each conjunct must compare one plain left " +
-            s"column with one plain right column: ${ChLexer.render(c)}")
+    toks.indices.foreach { q =>
+      val (t, b) = (toks(q), blockOf(q))
+      if (t.text == "(") depth += 1
+      else if (t.text == ")") depth -= 1
+      else if (t.is("SELECT")) select(b) = (q, depth)
+      else if (select.get(b).exists(_._2 == depth)) {
+        if (t.is("JOIN")) joins(b) += 1
+        else if (t.is("ASOF") && toks.drop(q + 1)
+            .dropWhile(x => x.is("LEFT") || x.is("INNER") || x.is("OUTER"))
+            .headOption.exists(_.is("JOIN"))) {
+          dropped += q
+          marks(b) = marks.getOrElse(b, Vector.empty) :+ (joins(b) + 1)
         }
       }
     }
-    val (lt, rt, op) = timePair.getOrElse(
-      bad("missing the time inequality conjunct"))
-    // the lowering's own helper names must not shadow user columns —
-    // a left table with a column literally named __t would make the
-    // inner SELECT * ambiguous (or silently filter on the wrong one)
-    locally {
-      val reserved = Set("__t", "__side", "__rpay", "__m", "__asof") ++
-        keys.indices.map(ix => s"__k$ix")
-      val hit = (leftCols ++ rightCols).filter(c => reserved(c.toLowerCase))
-      if (hit.nonEmpty)
-        bad(s"column name(s) ${hit.mkString(", ")} collide with the " +
-          "lowering's reserved helper names - rename, or use " +
-          "graft.operators.Joins.asofLeftNativeMulti")
-      val collide0 = leftCols.toSet
-      val outNames = rightCols.map(c =>
-        if (collide0(c)) s"__r_$c" else c)
-      if (outNames.distinct.length != outNames.length ||
-        outNames.exists(n => n.startsWith("__r_") && collide0(n)))
-        bad("a column named __r_<col> collides with the lowering's " +
-          "collision-renaming scheme - rename it")
-    }
-    // ---- generate the union-and-carry-forward subquery. Side tags:
-    // at EQUAL time the right row sorts before the left row for the
-    // inclusive modes (so an exact-time right row matches) and after
-    // it for the strict modes; forward modes walk time descending.
-    def q(c: String) = "`" + c + "`"
-    val (dir, rightTag) = op match {
-      case ">=" => ("", 0) // backward inclusive (the CH default)
-      case ">" => ("", 2) // backward strict
-      case "<=" => (" DESC", 0) // forward inclusive
-      case _ => (" DESC", 2) // forward strict
-    }
-    val keyOuts = keys.indices.map(ix => s"__k$ix")
-    val lKeySel = keys.zipWithIndex.map { case ((lk, _), ix) =>
-      s"a.${q(lk)} AS __k$ix" }
-    val rKeySel = keys.zipWithIndex.map { case ((_, rk), ix) =>
-      s"b.${q(rk)} AS __k$ix" }
-    // the time column keeps its OWN type in each branch: UNION ALL's
-    // type coercion unifies the two sides to their widest common type
-    // only when they actually differ, so an Int64 nanosecond axis stays
-    // lossless and a Date axis stays orderable (pre-fix both were CAST
-    // to DOUBLE, which silently rounds integers above 2^53 and rejects
-    // dates outright)
-    val lBranch = (lKeySel ++ Seq(s"a.${q(lt)} AS __t",
-      "1 AS __side") ++ leftCols.map(c => s"a.${q(c)} AS ${q(c)}") ++
-      Seq("NULL AS __rpay")).mkString(
-      "SELECT ", ", ", s" FROM $leftRef$leftMods a")
-    val rStruct = rightCols.map(c => s"'$c', b.${q(c)}")
-      .mkString("named_struct(", ", ", ")")
-    val rBranch = (rKeySel ++ Seq(s"b.${q(rt)} AS __t",
-      s"$rightTag AS __side") ++ leftCols.map(c => s"NULL AS ${q(c)}") ++
-      Seq(s"$rStruct AS __rpay")).mkString(
-      "SELECT ", ", ", s" FROM $rightRef$rightMods b")
-    val part = if (keyOuts.isEmpty) ""
-      else s"PARTITION BY ${keyOuts.mkString(", ")} "
-    val win = s"last(__rpay, true) OVER (${part}ORDER BY __t$dir, __side " +
-      "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS __m"
-    val collide = leftCols.toSet
-    def outName(c: String): String = if (collide(c)) s"__r_$c" else c
-    val finalSel = leftCols.map(c => q(c)) ++ rightCols.map { c =>
-      val v = rightDefaults.get(c).fold(s"__m.${q(c)}")(d =>
-        s"coalesce(__m.${q(c)}, $d)")
-      s"$v AS ${q(outName(c))}"
-    }
-    val innerFilter = if (isLeftJoin) "" else " AND __m IS NOT NULL"
-    val gen = s"(SELECT ${finalSel.mkString(", ")} FROM (SELECT *, $win " +
-      s"FROM ($lBranch UNION ALL $rBranch)) WHERE __side = 1$innerFilter)"
-    // ---- splice + requalify outer references (same-block discipline)
-    val (blockIds, inListArr) = selectBlockScopes(toks)
-    val joinBlock = blockIds(i)
-    def requal(ts: Vector[Token], offset: Int): Vector[Token] = {
-      val out = Vector.newBuilder[Token]
-      ts.zipWithIndex.foreach { case (t, ix) =>
-        val pos = offset + ix
-        if (t.isIdent && !t.isString && blockIds(pos) == joinBlock) {
-          def strip(a: String): Option[String] =
-            if (t.text.startsWith(a + ".")) Some(t.text.stripPrefix(a + "."))
-            else if (t.text.startsWith("`" + a + "`."))
-              Some(t.text.stripPrefix("`" + a + "`."))
-            else None
-          strip(leftAlias) match {
-            case Some(c) => out += t.copy(text = "__asof." + c)
-            case None => strip(rightAlias) match {
-              case Some(c0) =>
-                val c = stripTicks(c0)
-                out += t.copy(text = "__asof." + outName(c))
-                // a collision-renamed BARE SELECT item keeps its
-                // user-visible column name
-                val bare = collide(c) && inListArr(pos) && pos > 0 &&
-                  pos + 1 < toks.length &&
-                  (toks(pos - 1).text == "," || toks(pos - 1).is("SELECT") ||
-                    toks(pos - 1).is("DISTINCT")) &&
-                  (toks(pos + 1).text == "," || toks(pos + 1).is("FROM"))
-                if (bare) { out += Token("AS") += Token(c); () }
-              case None => out += t
-            }
-          }
-        } else out += t
-      }
-      out.result()
-    }
-    val rebuilt = requal(toks.take(fromIdx + 1), 0) ++
-      ChLexer.tokenize(gen) ++ Vector(Token("AS"), Token("__asof")) ++
-      requal(toks.slice(e, toks.length), e)
-    rewriteAsofJoin(rebuilt, resolver, useNulls)
+    val hints = marks.map { case (b, ns) =>
+      select(b)._1 -> Token(ns.mkString("/*+ GRAFT_ASOF(", ", ", ") */")) }
+    toks.indices.flatMap { q =>
+      if (dropped(q)) Nil
+      else toks(q) +: hints.get(q).toSeq
+    }.toVector
   }
 
   /** SQL word-forms that pass [[Token.isIdent]] but can never be a bare
@@ -2082,7 +1747,7 @@ object ChSqlRewrite {
 
   /** ClickHouse accepts a bare `USING a, b` join-column list; Spark's
     * parser requires the parenthesized form. Normalized EARLY, so every
-    * downstream rewrite (ANY dedup keys, the ASOF lowering, plain joins
+    * downstream rewrite (ANY dedup keys, plain and ASOF joins
     * that reach Spark's parser verbatim) sees one spelling.
     */
   private def normalizeBareUsing(toks: Vector[Token],
@@ -2116,9 +1781,8 @@ object ChSqlRewrite {
   /** The column list of a `USING` clause at `k` (the USING token), both
     * ClickHouse spellings — parenthesized `USING (a, b)` and bare
     * `USING a, b` — returning (columns, index of the first token after
-    * the list). Pre-fix both join rewrites sliced an empty list on the
-    * bare form: the ASOF lowering threw, and the ANY dedup silently
-    * picked ONE global row (zero partition keys).
+    * the list). Pre-fix the ANY dedup sliced an empty list on the bare
+    * form and silently picked ONE global row (zero partition keys).
     *
     * The bare form is comma-delimited and a comma ALSO spells a
     * comma-join in the enclosing FROM (`t1 JOIN t2 USING k, t3`), which
@@ -2278,124 +1942,6 @@ object ChSqlRewrite {
     rewriteSemiRightRefs(
       toks.updated(i, Token("ANY")).updated(i + 1, Token("INNER")),
       resolver, i + 3)
-  }
-
-  /** Expands a SELECT-list qualified star `a.*` (optionally with an
-    * `EXCEPT (cols)` tail) into the explicit `a.c1, a.c2, …` column
-    * list of the plain CATALOG TABLE that `a` names or aliases in the
-    * same block's FROM region. Runs only in blocks with an ASOF join:
-    * the expansion is semantically the projection Spark would produce
-    * anyway, but it lets the ASOF lowering requalify each side's
-    * columns one by one (a star over its flattened `__asof` subquery
-    * would read both sides). Subquery/CTE aliases are left alone, as
-    * are MergeTree virtual columns (ClickHouse hides them from stars).
-    */
-  private def expandQualifiedStars(toks: Vector[Token],
-                                   resolver: Resolver): Vector[Token] = {
-    if (!toks.exists(t => !t.isString && t.isIdent && t.text.endsWith(".*")))
-      return toks
-    if (!toks.exists(t => !t.isString && t.is("ASOF"))) return toks
-    val (blockOf, inList) = selectBlockScopes(toks)
-    val starBlocks = toks.indices.collect {
-      case i if toks(i).is("ASOF") => blockOf(i)
-    }.toSet
-    val cte = cteScopes(toks)
-    // (block, qualifier) → catalog table, from `FROM/JOIN table
-    // [[AS] alias]` shapes; an ALIASED table is addressable only by
-    // the alias (ClickHouse and Spark agree), an unaliased one by its
-    // last name segment
-    val comp = scala.collection.mutable.Map.empty[(Int, String), String]
-    var q = 0
-    while (q < toks.length - 1) {
-      val t = toks(q)
-      if ((t.is("FROM") || t.is("JOIN")) && toks(q + 1).isIdent &&
-        !toks(q + 1).isString &&
-        !(q + 2 < toks.length && toks(q + 2).text == "(") &&
-        !cteShadowed(cte, strip(toks(q + 1).text), q + 1) &&
-        resolver.resolve(strip(toks(q + 1).text)).isDefined) {
-        val table = strip(toks(q + 1).text)
-        var a = q + 2
-        if (a < toks.length && toks(a).is("AS")) a += 1
-        val alias =
-          if (a < toks.length && toks(a).isIdent && !toks(a).isString &&
-            !fromClauseEnd(toks(a)) && !joinFamily(toks(a)) &&
-            !toks(a).is("ON") && !toks(a).is("USING") &&
-            !sqlWordLike(toks(a).upper))
-            stripTicks(toks(a).text).toLowerCase
-          else table.split('.').last.toLowerCase
-        comp((blockOf(q + 1), alias)) = table
-      }
-      q += 1
-    }
-    if (comp.isEmpty) return toks
-    // paren depth per token + each block's select-list depth: only a
-    // TOP-LEVEL list item expands (a star inside a call like
-    // `count(a.*)` must stay one argument)
-    val depthAt = new Array[Int](toks.length)
-    val selDepth = scala.collection.mutable.Map.empty[Int, Int]
-    locally {
-      var d = 0
-      var k = 0
-      while (k < toks.length) {
-        if (toks(k).text == ")") d -= 1
-        depthAt(k) = d
-        if (toks(k).text == "(") d += 1
-        if (toks(k).is("SELECT") && !toks(k).isString)
-          selDepth.getOrElseUpdate(blockOf(k), depthAt(k))
-        k += 1
-      }
-    }
-    val virtuals = Set("_part", "_partition_id", "_shard_num", "_table")
-    val out = Vector.newBuilder[Token]
-    var p = 0
-    var changed = false
-    def colsOf(table: String): Option[Seq[String]] =
-      resolver.resolve(table).flatMap(rt => resolver.describe(rt.viewName))
-        .map(_.fieldNames.toSeq)
-    while (p < toks.length) {
-      val t = toks(p)
-      val topLevel = inList(p) &&
-        selDepth.get(blockOf(p)).contains(depthAt(p))
-      val expandable = t.isIdent && !t.isString &&
-        t.text.endsWith(".*") && t.text.length > 2 && topLevel &&
-        starBlocks(blockOf(p))
-      val hit: Option[Seq[(String, String)]] = if (expandable) {
-        val qual = stripTicks(t.text.dropRight(2)).toLowerCase
-        comp.get((blockOf(p), qual))
-          .flatMap(colsOf)
-          .map(cols => cols.map(c => (qual, c)))
-      } else None
-      hit match {
-        case Some(cols0) =>
-          // optional `EXCEPT (c1, c2)` tail: consume and exclude
-          var next = p + 1
-          var excluded = Set.empty[String]
-          if (next + 1 < toks.length && toks(next).is("EXCEPT") &&
-            toks(next + 1).text == "(") {
-            val close = matchParen(toks, next + 1)
-            if (close > 0) {
-              excluded = toks.slice(next + 2, close)
-                .filter(_.text != ",")
-                .map(x => stripTicks(x.text).toLowerCase).toSet
-              next = close + 1
-            }
-          }
-          val cols = cols0.filterNot { case (_, c) =>
-            virtuals(c.toLowerCase) || excluded(c.toLowerCase) }
-          if (cols.isEmpty) { out += t; p += 1 }
-          else {
-            cols.zipWithIndex.foreach { case ((a, c), ix) =>
-              if (ix > 0) out += Token(",")
-              out += Token(s"$a.`$c`") += Token("AS") +=
-                Token("`" + c + "`")
-            }
-            changed = true
-            p = next
-          }
-        case None => out += t; p += 1
-      }
-    }
-    if (changed) out.result() else toks
   }
 
   // ---- PREWHERE p [WHERE w] → WHERE (p) AND (w) ----
@@ -2677,9 +2223,8 @@ object ChSqlRewrite {
     * name). None when the name is not bound there (e.g. a WITH nested
     * inside a subquery) — callers then treat the side as unknown-schema
     * and skip conservatively, NEVER as the same-named catalog table.
-    * Powers the ASOF lowering and the LEFT SEMI right-read check for
-    * CTE join sides: a CTE is a subquery, so its columns (and an ASOF
-    * LEFT miss's defaults) come from its analyzed output schema
+    * Powers the LEFT SEMI right-read check for CTE join sides: a CTE is
+    * a subquery, so its columns come from its analyzed output schema
     * ([[Resolver.describeQuery]]).
     */
   private def cteProbe(toks: Vector[Token], name: String): Option[String] = {

@@ -156,26 +156,6 @@ object ChTypes {
   def defaultColumn(dt: DataType, nullable: Boolean = false): Column =
     GraftSqlBridge.column(defaultValue(dt, nullable))
 
-  /** [[defaultValue]] as SQL text of type `dt` (the ASOF lowering
-    * splices it into an unmatched row's columns). A Tuple renders
-    * element-wise: field names become SQL string literals with embedded
-    * quotes escaped.
-    */
-  def defaultLiteralSql(dt: DataType, nullable: Boolean = false): String = {
-    val v = defaultValue(dt, nullable)
-    dt match {
-      case _ if v.value == null => s"CAST(NULL AS ${dt.sql})"
-      case s: StructType =>
-        s.fields.map(f => s"'${f.name.replace("'", "''")}', " +
-          defaultLiteralSql(f.dataType, f.nullable))
-          .mkString("CAST(named_struct(", ", ", s") AS ${s.sql})")
-      // plain digits: the rewriter's lexer would read Spark's typed
-      // literal suffixes (0L, 0S, 0BD) as identifiers
-      case _: NumericType => s"CAST(${v.value} AS ${dt.sql})"
-      case _ => s"CAST(${v.sql} AS ${dt.sql})"
-    }
-  }
-
   /** Splits "a, b(c, d), e" on top-level commas only. Both quote kinds
     * protect their content: single-quoted SQL literals ('' escape) and
     * double-quoted strings — the latter matter when the separator is ';'

@@ -92,7 +92,6 @@ object ChRegistry {
       val branches = e.dropRight(1).grouped(2).map { case Seq(c, v) => (c, v) }.toSeq
       CaseWhen(branches, Some(default))
     }
-    f("if")(e => If(e(0), e(1), e(2)))
     f("ifNull")(e => Coalesce(e))
 
     // aggregates
@@ -166,13 +165,13 @@ object ChRegistry {
     // introspection scalars the course queries constantly (system-table
     // tours, lectures/lecture_02.md:213, lecture_08.md): tuple() is CH's
     // anonymous struct (also its "empty partition key" idiom), toTypeName
-    // prints the argument's type, hostName()/version() identify the server.
+    // prints the argument's type, hostName() identifies the server (Spark's
+    // own version() answers for the server version).
     // hostName is bound once, when the table is built — in local mode the
     // driver IS the executing server, which is exactly CH's semantics.
     f("tuple")(e => CreateStruct(e))
     f("toTypeName")(e => TypeOf(e.head))
     f("currentDatabase")(_ => CurrentDatabase())
-    f("version")(_ => SparkVersion())
     val host = java.net.InetAddress.getLocalHost.getHostName
     f("hostName")(_ => Literal(host))
     // getMacro('name') reads the server's config macros — one engine, so

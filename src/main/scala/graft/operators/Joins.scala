@@ -70,10 +70,10 @@ object Joins {
     val w = Window.partitionBy(col("__k")).orderBy(col("__t"), col("__side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val carried = rTagged.unionByName(lTagged)
-      .withColumn("__asof", last(col("__rv"), ignoreNulls = true).over(w))
+      .withColumn("__carried", last(col("__rv"), ignoreNulls = true).over(w))
       .filter(col("__side") === 1)
     val leftOut = left.columns.map(c => col("__lv").getField(c).as(c))
-    val rightOut = rightCols.map(c => col("__asof").getField(c).as(prefix + c))
+    val rightOut = rightCols.map(c => col("__carried").getField(c).as(prefix + c))
     carried.select(leftOut.toSeq ++ rightOut: _*)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
@@ -18,7 +18,10 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * right with `rightTime >= leftTime` (`>` when strict). These are the
   * four inequality forms the reference accepts in the ASOF ON clause.
   * `isLeftOuter` keeps unmatched left rows with nulls (ASOF LEFT JOIN);
-  * otherwise they drop (ASOF INNER, ClickHouse's default).
+  * otherwise they drop (ASOF INNER, ClickHouse's default). A NULL key
+  * or time never matches. SQL text reaches it through
+  * [[ChJoinDefaults.select]], the library through
+  * [[graft.operators.Joins.asofNativeMulti]].
   *
   * Physical shape: both sides hash-partitioned on the key (one shuffle
   * each, inserted by EnsureRequirements from the declared distribution)
@@ -64,8 +67,10 @@ case class AsOfJoinExec(
     left.output ++ (if (isLeftOuter) right.output.map(_.withNullability(true))
                     else right.output)
 
+  // no keys (`ON l.t >= r.t` alone): one partition per side
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
+    if (leftKeys.isEmpty) AllTuples :: AllTuples :: Nil
+    else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTime, Ascending),

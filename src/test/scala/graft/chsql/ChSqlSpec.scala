@@ -1918,6 +1918,41 @@ class ChSqlSpec extends SparkSpec {
         |ORDER BY k, l.t SETTINGS join_use_nulls = 1""".stripMargin).collect()
     assert(nu.exists(_.isNullAt(1)),
       "join_use_nulls = 1 must surface NULL on the k=3 ASOF miss")
+    // bare `*` over USING reads each key once, the left side's
+    val star = s.sql("SELECT * FROM aql ASOF LEFT JOIN aqr USING (k, t)")
+    assert(star.columns.toSeq == Seq("k", "t", "a", "v"), star.columns.toSeq)
+    assert(star.collect().length == 4)
+    // two ASOF joins in one SELECT: the latest event at or before each
+    // left row and the first at or after it
+    val two = s.sql(
+      """SELECT l.k AS k, l.t AS t, b.v AS before, f.v AS after
+        |FROM aql l ASOF LEFT JOIN aqr b ON l.k = b.k AND l.t >= b.t
+        |ASOF LEFT JOIN aqr f ON l.k = f.k AND l.t <= f.t
+        |ORDER BY k, t""".stripMargin).collect()
+    assert(two.map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+      r.getString(3))).toSeq == lRows.map { case (k, t) =>
+        (k, t, model(">=")((k, t)).getOrElse(""),
+          model("<=")((k, t)).getOrElse(""))
+      }, two.toSeq)
+    // the ON form runs on the native operator
+    val onPlan = s.sql("SELECT l.a, r.v FROM aql l ASOF LEFT JOIN aqr r " +
+      "ON l.k = r.k AND l.t >= r.t").queryExecution.optimizedPlan
+    assert(onPlan.collectFirst { case p: graft.plans.AsOfJoinPlan => p }
+      .nonEmpty, onPlan.treeString)
+    // a NULL key or time matches nothing, not another NULL: '' under
+    // LEFT, no row under INNER
+    s.execute(
+      """CREATE TABLE asnl (k Nullable(UInt32), t Nullable(UInt32), a String) ENGINE = Memory;
+        |CREATE TABLE asnr (k Nullable(UInt32), t Nullable(UInt32), v String) ENGINE = Memory;
+        |INSERT INTO asnl VALUES (NULL, 10, 'ln'), (2, NULL, 'tn'), (1, 10, 'l1');
+        |INSERT INTO asnr VALUES (NULL, 5, 'rn'), (2, NULL, 'sn'), (1, 5, 'r1');""".stripMargin)
+    Seq("ASOF LEFT JOIN" -> Seq(("l1", "r1"), ("ln", ""), ("tn", "")),
+      "ASOF JOIN" -> Seq(("l1", "r1"))).foreach { case (kind, expect) =>
+      val got = s.sql(s"SELECT l.a, r.v FROM asnl l $kind asnr r " +
+        "ON l.k = r.k AND l.t >= r.t ORDER BY l.a").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(got == expect, s"$kind over NULL keys and times: $got")
+    }
   }
 
   test("ANY LEFT JOIN ... ON accepts an unqualified right column (hw06 idiom)") {
@@ -2261,7 +2296,7 @@ class ChSqlSpec extends SparkSpec {
       .toSeq == Seq(("x1", "y1", "z1"), ("", "", "z3")),
       s"composite left side must fill both components: ${co.toSeq}")
     // 5. ASOF LEFT JOIN fills its misses like plain LEFT JOIN, through
-    //    the union-and-carry-forward lowering
+    //    the same outer-join fill
     val as = s.sql("SELECT l.a, r.v FROM rslt l ASOF LEFT JOIN rsrt r " +
       "ON l.k = r.k AND l.t >= r.t ORDER BY l.a").collect()
     assert(as.map(r => (r.getString(0), r.getString(1))).toSeq ==
@@ -2389,18 +2424,19 @@ class ChSqlSpec extends SparkSpec {
     assert(dts.head.getString(1) == "early", s"date axis: ${dts.toSeq}")
   }
 
-  test("ASOF lowering refuses user columns colliding with its helper names") {
+  test("ASOF JOIN reads user columns named like internal helper names") {
     val s = ch
     s.execute(
       """CREATE TABLE hcl (k UInt32, __t UInt32) ENGINE = Memory;
-        |CREATE TABLE hcr (k UInt32, t UInt32, v String) ENGINE = Memory;""".stripMargin)
-    val err = intercept[IllegalArgumentException] {
-      s.sql(
-        """SELECT l.k AS k, r.v AS v FROM hcl l ASOF JOIN hcr r
-          |ON l.k = r.k AND l.__t >= r.t""".stripMargin)
-    }
-    assert(err.getMessage.contains("reserved helper"),
-      s"expected the collision refusal, got: ${err.getMessage}")
+        |CREATE TABLE hcr (k UInt32, t UInt32, v String) ENGINE = Memory;
+        |INSERT INTO hcl VALUES (1, 10);
+        |INSERT INTO hcr VALUES (1, 5, 'r5'), (1, 20, 'r20');""".stripMargin)
+    // the latest right row at or before __t = 10 is t = 5
+    val rows = s.sql(
+      """SELECT l.k AS k, r.v AS v FROM hcl l ASOF JOIN hcr r
+        |ON l.k = r.k AND l.__t >= r.t""".stripMargin).collect()
+    assert(rows.map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "r5")), rows.toSeq)
   }
 
   test("left()/any() calls inside ON conditions are not join keywords") {
@@ -2491,13 +2527,15 @@ class ChSqlSpec extends SparkSpec {
     // row at or before their t → dropped by the inner mode
     assert(mixed.length == 2 && mixed.forall(_.getString(2).nonEmpty),
       s"mixed sides inner: ${mixed.toSeq}")
-    // a subquery side without an alias is refused crisply
-    val err = intercept[IllegalArgumentException] {
-      s.sql(
-        """SELECT 1 FROM (SELECT k, t FROM sql_l)
-          |ASOF JOIN sql_r r ON k = r.k AND t >= r.t""".stripMargin)
-    }
-    assert(err.getMessage.contains("alias"), err.getMessage)
+    // a subquery side without an alias runs; its unqualified names are
+    // the left side's
+    val unaliased = s.sql(
+      """SELECT k, t, r.v AS v FROM (SELECT k, t FROM sql_l)
+        |ASOF JOIN sql_r r ON k = r.k AND t >= r.t
+        |ORDER BY k, t""".stripMargin).collect()
+    assert(unaliased.map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      .toSeq == Seq((1L, 10L, "r5"), (1L, 20L, "r20"), (1L, 99L, "rcut")),
+      unaliased.toSeq)
   }
 
   test("ASOF JOIN in SQL text accepts a composite left join TREE (r11)") {
@@ -2510,8 +2548,8 @@ class ChSqlSpec extends SparkSpec {
         |INSERT INTO trm VALUES (1, 'one'), (2, 'two');
         |INSERT INTO trr VALUES (1, 5, 'r5'), (1, 12, 'r12'), (2, 99, 'late');""".stripMargin)
     // tree = trl JOIN trm; the ASOF right picks the latest r at or
-    // before each tree row's t — the tree flattens through __asofl
-    // and the ON's component references requalify onto it
+    // before each tree row's t — the ON reads the tree's components
+    // by their own aliases
     val rows = s.sql(
       """SELECT a.k AS k, a.t AS t, m.label AS label, r.v AS v
         |FROM trl a JOIN trm m ON a.k = m.k2

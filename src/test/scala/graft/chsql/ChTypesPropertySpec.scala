@@ -128,18 +128,4 @@ class ChTypesPropertySpec extends AnyFunSuite {
       .contains(Seq(1 -> "a=b", 2 -> "c")))
     assert(ChTypes.parse("String").enumMap.isEmpty)
   }
-
-  test("defaultLiteralSql escapes struct field names containing quotes " +
-    "(they are embedded as SQL string literals)") {
-    val dt = StructType(Seq(
-      StructField("it's", StringType, nullable = false),
-      StructField("plain", IntegerType, nullable = false)))
-    val sql = ChTypes.defaultLiteralSql(dt)
-    assert(sql.contains("'it''s'"), s"field name must '' -escape: $sql")
-    // the emitted literal must be valid Spark SQL and carry the defaults
-    val spark = graft.SparkTestSession.spark
-    val row = spark.sql(s"SELECT $sql AS v").collect().head
-      .getStruct(0)
-    assert(row.getString(0) == "" && row.getInt(1) == 0)
-  }
 }

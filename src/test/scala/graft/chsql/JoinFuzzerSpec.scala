@@ -6,8 +6,8 @@ import graft.SparkSpec
   * r8 ANY-degrade bug and the r9 join_use_nulls bug were both found by
   * targeted metamorphic laws, so this generalizes the class — a seeded
   * generator enumerates join kind × strictness (ALL/ANY/SEMI/ANTI/ASOF,
-  * the ASOF draws covering all four inequality modes of the r10 SQL
-  * lowering) × condition form (USING/ON) × projection form
+  * the ASOF draws covering all four inequality modes of the native
+  * ASOF operator) × condition form (USING/ON) × projection form
   * (qualified/unqualified) × join_use_nulls setting over keyed
   * fixtures whose DATA is drawn
   * from a seeded Random, executes each query through the ClickHouse
@@ -23,8 +23,8 @@ import graft.SparkSpec
   * xxhash64 tie-break chose, while ALL-vs-ANY multiplicity differences
   * stay fully observable in the multiset compare.
   *
-  * First find (fixed in the same round): rewriteAntiRightCols ignored
-  * `join_use_nulls = 1` — anti-join right columns substituted type
+  * First find (fixed in the same round): the ANTI right-column read
+  * ignored `join_use_nulls = 1` — anti-join right columns read type
   * defaults where ClickHouse surfaces NULLs.
   */
 class JoinFuzzerSpec extends SparkSpec {
@@ -121,7 +121,7 @@ class JoinFuzzerSpec extends SparkSpec {
         (p, _) => Vector(p._1.get._1.toString, p._1.get._2, p._1.get._3.toString))
     case "LEFT ANTI JOIN" =>
       // the right side is provably unmatched: defaults under =0, NULLs
-      // under =1 (rewriteAntiRightCols substitutes the literal)
+      // under =1 (the plan restore re-emits them as defaults)
       ("l.k AS lk, l.lv AS lv, r.rv AS rv, r.rn AS rn",
         (p, un) => Vector(p._1.get._1.toString, p._1.get._2,
           cell(None, un, ""), cell(None, un, "0")))
@@ -186,7 +186,7 @@ class JoinFuzzerSpec extends SparkSpec {
           ran += 1
         }
       }
-      // ASOF draws (r10 SQL lowering): 4 inequality modes × inner/LEFT
+      // ASOF draws (the native operator): 4 inequality modes × inner/LEFT
       // × join_use_nulls over time-ful fixtures, vs the brute-force
       // pick-the-closest model
       val (aRows, bRows) = asofCorpus(seed)

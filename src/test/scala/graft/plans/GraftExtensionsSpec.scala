@@ -27,6 +27,9 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(one("SELECT countIf(id > 0) FROM range(3)").getLong(0) == 2L)
     assert(one("SELECT finalizeAggregation(st) FROM " +
       "(SELECT uniqState(CAST(id AS STRING)) AS st FROM range(3))").getString(0) == "3")
+    // ClickHouse names Spark already registers with the same meaning
+    assert(one("SELECT if(1 > 0, 'y', 'n')").getString(0) == "y")
+    assert(one("SELECT version()").getString(0).nonEmpty)
   }
 
   private final class ReplacedWarns extends AbstractAppender(

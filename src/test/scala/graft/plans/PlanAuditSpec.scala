@@ -299,27 +299,24 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("ASOF SQL lowering plans NO join at all: union + ONE keyed window, " +
-    "no candidate explosion") {
-    // the r10 dialect lowering must produce the carry-forward shape —
+  test("ASOF SQL runs on the native AsOfJoinExec: no candidate " +
+    "explosion") {
     // a range-join-then-pick-max formulation would show a join operator
-    // and blow up with match density at 100 TB
+    // and blow up with match density at 100 TB; the merge-scan keeps
+    // one row per left row
     val s = new graft.chsql.ChSession(spark)
     s.execute(
       """CREATE TABLE pal (k UInt32, t UInt32, a String) ENGINE = Memory;
         |CREATE TABLE par (k UInt32, t UInt32, v String) ENGINE = Memory;
         |INSERT INTO pal VALUES (1, 10, 'a');
         |INSERT INTO par VALUES (1, 5, 'r');""".stripMargin)
-    val plan = formatted(s.sql(
-      "SELECT l.a, r.v FROM pal l ASOF LEFT JOIN par r " +
-        "ON l.k = r.k AND l.t >= r.t"))
-    assert(count(plan, "Join") == 0,
-      "the ASOF lowering must not plan a join:\n" + plan)
-    assert(plan.contains("Window") && plan.contains("Union"), plan)
-    // exactly ONE shuffle, keyed on the equi keys (formatted output
-    // names each node twice — tree line + detail — so count the
-    // partitioning spec, which appears once per Exchange)
-    assert(count(plan, "hashpartitioning(") == 1, plan)
+    val df = s.sql("SELECT l.a, r.v FROM pal l ASOF LEFT JOIN par r " +
+      "ON l.k = r.k AND l.t >= r.t")
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("AsOfJoin"), plan)
+    Seq("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct",
+      "Union").foreach(op => assert(!plan.contains(op), s"$op in:\n$plan"))
   }
 
   test("ReplacingMergeTree FINAL plans a max_by aggregate with MAP-SIDE " +
